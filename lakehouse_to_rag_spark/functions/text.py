@@ -32,6 +32,14 @@ _WS_RE = r"\s+"
 # dialects read the \t/\n/\x0B escapes the same way).
 WS_CLASS = r"[ \t\n\x0B\f\r]+"
 
+
+def ws_token_count(col: Column) -> Column:
+    """The package's whitespace-token estimator: the number of pieces a
+    ``WS_CLASS`` split leaves, empty edge pieces included — ``""``
+    counts 1 and ``" a"`` counts 2. The oracle SQL replays this exact
+    rule, so every token-budget operator must count through it."""
+    return F.size(F.split(col, WS_CLASS, -1))
+
 # The single-regex _STRIP_RE form is a scalability trap on the JVM:
 # java.util.regex compiles a character class mixing named classes and
 # literals into a chain of BmpCharPredicate.union lambdas, and with

@@ -48,22 +48,19 @@ def migrate_ledger(
     ``rebucket`` (a callable DataFrame -> rows carrying a ``bucket``
     column — the caller's distinct + banding/bucketing projection,
     which also heals a crashed bootstrap's partial rows), record the
-    scheme, and swap atomically via the two-rename discipline
-    (``_recover_dir_swap``'s ``__upsert_``/``__old_`` remnant
-    classes). O(cumulative) once; every subsequent batch reads only
-    its colliding buckets."""
+    scheme, and swap atomically (``sources.dirswap.swap_in``; the
+    callers' ``recover`` heals an interrupted swap). O(cumulative)
+    once; every subsequent batch reads only its colliding buckets."""
+    from lakehouse_to_rag_spark.sources.dirswap import staging_path, swap_in
     from lakehouse_to_rag_spark.sources.lakehouse import write_layer
 
     rows = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staging_path(path)
     write_layer(
         rebucket(rows), tmp, partition_by=["bucket"], fmt="parquet"
     )
     write_scheme(spark, tmp, scheme_fields)
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(tmp, path)
 
 
 def compact_ledger(spark: SparkSession, path: str, split_col: str) -> int:

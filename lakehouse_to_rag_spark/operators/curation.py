@@ -433,6 +433,9 @@ def admit_batch(
       table migrates once, atomically (``migrate_fp_table``).
     - compaction on per-bucket file depth through the shared
       ``_compact_index_layout`` swap (``_scheme`` carried verbatim).
+      Each call first runs ``sources.dirswap.recover`` on the table,
+      so a migration or compaction swap that died mid-way is healed
+      before the table is read.
 
     Replay semantics match the media ledger: a batch that died
     mid-append re-admits exactly its not-yet-visible fingerprints on
@@ -456,13 +459,13 @@ def admit_batch(
     import os
     import uuid
 
+    from lakehouse_to_rag_spark.sources.dirswap import recover
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
         write_layer,
     )
 
-    _recover_dir_swap(fp_table_path)
+    recover(fp_table_path)
     exists = os.path.exists(fp_table_path)
     if exists:
         stored = _read_fp_scheme(spark, fp_table_path)
@@ -999,7 +1002,7 @@ def training_shards_assign(
     over a total order), which is what makes the simple
     SUM() OVER (ORDER BY ...) oracle exact. Returns
     (id_col, shuffle_key, n_tokens, shard)."""
-    from lakehouse_to_rag_spark.functions.text import WS_CLASS
+    from lakehouse_to_rag_spark.functions.text import ws_token_count
 
     if token_budget < 1:
         raise ValueError(
@@ -1008,7 +1011,7 @@ def training_shards_assign(
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    toks = F.size(F.split(F.col(text_col), WS_CLASS, -1)).cast("long")
+    toks = ws_token_count(F.col(text_col)).cast("long")
     keyed = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         _shuffle_key_col(id_col, seed),
@@ -1083,32 +1086,29 @@ def write_training_shards(
     BACK from the written files (counts + hashes, the
     rag_index_manifest convention: the manifest proves the write, not
     the plan). Crash-safe: everything — data AND its ``_manifest`` —
-    builds in a staging dir and lands via the module's two-rename
-    swap, so a visible layer always carries the manifest that
-    describes it; remnants of a crashed swap are healed by
-    ``_recover_dir_swap`` on the next call (the upsert/compact
-    recovery contract). Returns the manifest:
-    (shard, n_docs, n_tokens, id_hash)."""
-    import os
-    import shutil
-    import uuid
-
+    builds in a staging dir and lands via ``sources.dirswap.swap_in``,
+    so a visible layer always carries the manifest that describes it;
+    remnants of a crashed swap are healed by ``recover`` on the next
+    call. Returns the manifest: (shard, n_docs, n_tokens, id_hash)."""
+    from lakehouse_to_rag_spark.sources.dirswap import (
+        recover,
+        staging_path,
+        swap_in,
+    )
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
         write_layer,
     )
 
     spark = docs.sparkSession
-    _recover_dir_swap(path)
+    recover(path)
     assigned = training_shards_assign(
         docs, token_budget, id_col, text_col, seed
     )
     data = docs.join(assigned, id_col).select(
         F.col(id_col), "shard", "shuffle_key", "n_tokens", F.col(text_col)
     )
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"  # _recover_dir_swap's
-    # tmp-prefix class: a crash before the swap leaves a discardable dir
+    tmp = staging_path(path)
     write_layer(
         data.repartition("shard").sortWithinPartitions(
             "shard", "shuffle_key"
@@ -1133,13 +1133,7 @@ def write_training_shards(
         .withColumn("id_col", F.lit(id_col))
     )
     write_layer(manifest, f"{tmp}/_manifest", fmt="parquet")
-    if os.path.exists(path):
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
+    swap_in(tmp, path)
     return read_layer(spark, f"{path}/_manifest", fmt="parquet")
 
 

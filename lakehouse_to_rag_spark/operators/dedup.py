@@ -2073,7 +2073,7 @@ def migrate_media_ledger(
     rows — which heals both the pre-r13 flat layout AND a crashed
     bootstrap that wrote band rows but died before its ``_scheme`` —
     rewrite as band rows under ``bucket=N/`` with the scheme record,
-    and swap atomically (``_recover_dir_swap``'s remnant classes).
+    and swap atomically (``sources.dirswap``).
     O(cumulative) once; every subsequent batch reads only its
     colliding buckets — the shared ``_ledger.migrate_ledger``
     discipline."""
@@ -2152,6 +2152,9 @@ def admit_media_batch(
     (> ``compact_files_threshold``) — the same per-batch cadence as
     the flat layout — compacted through the shared
     ``_compact_index_layout`` swap (``_scheme`` carried verbatim).
+    Each call first runs ``sources.dirswap.recover`` on the ledger,
+    so a migration or compaction swap that died mid-way is healed
+    before the ledger is read.
 
     Crash/replay semantics are unchanged from the upsert form: a
     batch that died mid-append re-admits exactly its not-yet-visible
@@ -2166,8 +2169,8 @@ def admit_media_batch(
     import os
     import uuid
 
+    from lakehouse_to_rag_spark.sources.dirswap import recover
     from lakehouse_to_rag_spark.sources.lakehouse import (
-        _recover_dir_swap,
         read_layer,
         write_layer,
     )
@@ -2181,7 +2184,7 @@ def admit_media_batch(
             f"unknown media kind {media!r}: image | audio"
         )
     num_bands = _resolve_bands(num_bands, max_hamming, "admit_media_batch")
-    _recover_dir_swap(sig_table_path)
+    recover(sig_table_path)
     exists = os.path.exists(sig_table_path)
     if exists:
         scheme = _read_media_scheme(spark, sig_table_path)

@@ -65,7 +65,6 @@ def run_medallion_incremental(
     state_dir: str,
     deterministic: bool = True,
     min_content_length: int = 50,
-    upsert_buckets: int | None = None,
 ) -> dict[str, DataFrame]:
     """URL-keyed MAINTAINED-mode medallion — the reference's documented
     intent (re-crawled pages keyed by url, airflow/dags/etl.py:179-198)
@@ -93,18 +92,16 @@ def run_medallion_incremental(
 
     Scale shape: per-batch cost is O(batch) transform + one
     column-pruned anti-join scan of bronze's key column + the upsert
-    (file-level rewrite under Delta; the parquet fallback is O(layer)
-    flat, or O(touched buckets) with ``upsert_buckets`` — r14, VERDICT
-    r13 task 5: the key-bucketed ``_kb=N`` layout rewrites only the
-    buckets a batch's keys hash to, see ``upsert_by_key``). Bronze
-    upserts by the unique raw key (doc_id) so a replayed batch lands
-    exactly once; silver/gold upserts are naturally idempotent because
-    admission makes every written key first-seen. A batch whose
-    admissions come up EMPTY (a pure re-crawl wave) skips the
-    silver/gold upserts outright (r14, guide §1.2: an upsert of zero
-    rows rewrote — or under buckets, scanned — the layers for
-    nothing); its bronze upsert still lands LAST as the commit
-    marker, so the crash contract is unchanged. The admission count
+    (file-level rewrite under Delta; the parquet fallback is an
+    O(layer) rewrite published by ``sources.dirswap.swap_in``, see
+    ``upsert_by_key``). Bronze upserts by the unique raw key (doc_id)
+    so a replayed batch lands exactly once; silver/gold upserts are
+    naturally idempotent because admission makes every written key
+    first-seen. A batch whose admissions come up EMPTY (a pure
+    re-crawl wave) skips the silver/gold upserts outright (r14, guide
+    §1.2: an upsert of zero rows rewrote the layers for nothing); its
+    bronze upsert still lands LAST as the commit marker, so the crash
+    contract is unchanged. The admission count
     rides the one materialization the batch already paid (the lazy
     checkpoint's first action IS the count job).
     """
@@ -167,12 +164,11 @@ def run_medallion_incremental(
 
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fs = pool.submit(
-                    upsert_by_key, spark, paths["silver"], fresh, ["url"],
-                    n_kb=upsert_buckets,
+                    upsert_by_key, spark, paths["silver"], fresh, ["url"]
                 )
                 fg = pool.submit(
                     upsert_by_key, spark, paths["gold"], gold_b,
-                    ["url", "chunk_index"], n_kb=upsert_buckets,
+                    ["url", "chunk_index"],
                 )
                 fs.result()
                 fg.result()
@@ -184,9 +180,7 @@ def run_medallion_incremental(
         # inverse window: a crash after bronze made the batch's urls
         # seen with their silver/gold rows permanently lost
         # (crash-replay tested in tests/test_pipeline.py).
-        upsert_by_key(
-            spark, paths["bronze"], bronze_b, ["doc_id"], n_kb=upsert_buckets
-        )
+        upsert_by_key(spark, paths["bronze"], bronze_b, ["doc_id"])
     return {k: read_layer(spark, p) for k, p in paths.items()}
 
 

@@ -332,27 +332,30 @@ def append_to_bm25_index(
 
     Commit discipline: the postings append lands first, then the
     updated one-row ``_stats`` is written to a sibling tmp dir and
-    swapped in (two renames) — ``_stats`` is therefore never torn by
-    a mid-overwrite crash, and stale ``._compact_``/``._old_``
-    remnants are repaired on the next append. The remaining
-    HALF-COMMIT window, stated: a crash after the postings append but
-    before the swap leaves ``_stats`` excluding the already-appended
-    docs (served avgdl/N silently stale) — on any append failure run
-    ``rebuild_bm25_stats`` (one scan of the postings, from which the
-    stats are fully derivable) to reconcile, or rebuild the index.
+    swapped in by ``sources.dirswap.swap_in`` — ``_stats`` is
+    therefore never torn by a mid-overwrite crash, and ``recover``
+    repairs any remnant of an interrupted swap on the next append.
+    The remaining HALF-COMMIT window, stated: a crash after the
+    postings append but before the swap leaves ``_stats`` excluding
+    the already-appended docs (served avgdl/N silently stale) — on
+    any append failure run ``rebuild_bm25_stats`` (one scan of the
+    postings, from which the stats are fully derivable) to reconcile,
+    or rebuild the index.
     Returns the number of posting rows appended."""
     import os
 
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
+    from lakehouse_to_rag_spark.sources.dirswap import (
+        recover,
+        staging_path,
+        swap_in,
     )
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         write_layer,
     )
 
-    _recover_compact_remnants(os.path.join(path, "_stats"))
-    _recover_compact_remnants(os.path.join(path, "_ids"))
+    recover(os.path.join(path, "_stats"))
+    recover(os.path.join(path, "_ids"))
     stats = _read_stats_row(spark, os.path.join(path, "_stats"))
     if "sum_dl" not in stats:
         raise ValueError(
@@ -494,22 +497,15 @@ def append_to_bm25_index(
         [(n_docs, sum_dl, sum_dl / n_docs, n_buckets)],
         "n_docs long, sum_dl long, avgdl double, n_buckets long",
     )
-    # tmp-write + two-rename swap: _stats is replaced whole, never
+    # staged write + swap: _stats is replaced whole, never
     # overwritten in place, so a crash can leave it STALE (see the
-    # half-commit caveat above) but never TORN. Same remnant naming as
-    # _compact_index_layout so one recovery routine repairs both.
+    # half-commit caveat above) but never TORN.
     # (tiny_df is already one slice — a coalesce(1) here used to cost
     # 4.5 s serially re-evaluating 32 pickled slices, see tables.py)
-    import shutil
-    import uuid
-
     sdir = os.path.join(path, "_stats")
-    tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staging_path(sdir)
     write_layer(new_stats, tmp)
-    old = f"{sdir}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(sdir, old)
-    os.rename(tmp, sdir)
-    shutil.rmtree(old)
+    swap_in(tmp, sdir)
     return n
 
 
@@ -527,14 +523,15 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     distinct indexed ids (r14: the membership sidecar the append's
     fail-closed check probes instead of a full-index scan), restoring
     the ids-superset invariant after the ids-append crash window left
-    orphan ids. One pruned scan feeds both via a lazy checkpoint; the
-    swap discipline matches the append path."""
+    orphan ids. One pruned scan feeds both via a lazy checkpoint; each
+    is published with ``sources.dirswap.swap_in``, like the append
+    path's ``_stats``."""
     import os
-    import shutil
-    import uuid
 
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _recover_compact_remnants,
+    from lakehouse_to_rag_spark.sources.dirswap import (
+        recover,
+        staging_path,
+        swap_in,
     )
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
@@ -542,9 +539,9 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     )
 
     sdir = os.path.join(path, "_stats")
-    _recover_compact_remnants(sdir)
+    recover(sdir)
     idir = os.path.join(path, "_ids")
-    _recover_compact_remnants(idir)
+    recover(idir)
     n_buckets = int(read_layer(spark, sdir).collect()[0]["n_buckets"])
     id_dl = (
         read_layer(spark, path)
@@ -558,21 +555,12 @@ def rebuild_bm25_stats(spark, path: str) -> None:
         (F.sum("dl") / F.count(F.lit(1))).alias("avgdl"),
         F.lit(n_buckets).cast("long").alias("n_buckets"),
     )
-    tmp = f"{sdir}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staging_path(sdir)
     write_layer(stats_df.coalesce(1), tmp)
-    old = f"{sdir}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(sdir, old)
-    os.rename(tmp, sdir)
-    shutil.rmtree(old)
-    itmp = f"{idir}._compact_{uuid.uuid4().hex[:8]}"
+    swap_in(tmp, sdir)
+    itmp = staging_path(idir)
     write_layer(id_dl.select("id"), itmp)
-    if os.path.exists(idir):
-        iold = f"{idir}._old_{uuid.uuid4().hex[:8]}"
-        os.rename(idir, iold)
-        os.rename(itmp, idir)
-        shutil.rmtree(iold)
-    else:
-        os.rename(itmp, idir)
+    swap_in(itmp, idir)
 
 
 def compact_bm25_index(

@@ -14,6 +14,7 @@ from lakehouse_to_rag_spark.functions.text import (
     STOPWORDS,
     WS_CLASS,
     normalize_text,
+    ws_token_count,
 )
 
 # BPE-ish token pattern: letter runs, digit runs, single punctuation.
@@ -131,7 +132,7 @@ def token_counts(
     """Token counting: whitespace tokens, BPE-ish regex tokens, and the
     chars/4 heuristic — the three standard LLM budget estimators."""
     t = F.col(text_col)
-    ws = F.size(F.split(t, WS_CLASS, -1))
+    ws = ws_token_count(t)
     bpe = F.regexp_count(t, F.lit(BPE_TOKEN_RE))
     est = F.ceil(F.length(t) / 4.0)
     return df.select(
@@ -582,7 +583,7 @@ def sequence_pack(
     from pyspark.sql import Window
 
     t = F.col(text_col)
-    toks = F.size(F.split(t, WS_CLASS, -1)).cast("long")
+    toks = ws_token_count(t).cast("long")
     w = (
         Window.partitionBy(group_col)
         .orderBy(F.col(order_col or id_col))
@@ -2025,7 +2026,7 @@ def token_budget_select(
         )
     base = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
-        F.size(F.split(F.col(text_col), WS_CLASS, -1))
+        ws_token_count(F.col(text_col))
         .cast("long")
         .alias("n_tokens"),
         *[c for c in df.columns if c not in (id_col, text_col)],

@@ -17,36 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _recover_dir_swap(path: str) -> None:
-    """Crash recovery for this module's two-rename directory swaps
-    (``upsert_by_key``'s ``__upsert_``/``__old_`` and
-    ``compact_layer``'s ``._compact_``/``._old_`` remnants) — the
-    ``_recover_compact_remnants`` contract (operators/similarity.py):
-    pre-first-rename partials are discarded (the source layer is
-    intact), a missing ``path`` with an old-dir present is the
-    between-renames window (the old dir is byte-complete — rename it
-    back; without this, a crash there LOSES the layer: ``upsert_by_key``
-    would treat the next upsert as a fresh write of only the update
-    rows), and both present means death before cleanup (the new layer
-    already serves; delete the old). Runs at the start of every swap
-    operation; safe and O(1) when there is nothing to repair."""
-    import glob
-    import os
-    import shutil
-
-    base = path.rstrip("/")
-    pat = glob.escape(base)
-    for t in glob.glob(f"{pat}__upsert_*") + glob.glob(f"{pat}._compact_*"):
-        shutil.rmtree(t, ignore_errors=True)
-    olds = sorted(glob.glob(f"{pat}__old_*") + glob.glob(f"{pat}._old_*"))
-    if olds:
-        if not os.path.exists(base):
-            # single-writer: at most one old dir can exist here
-            os.rename(olds[0], base)
-        else:
-            for o in olds:
-                shutil.rmtree(o, ignore_errors=True)
+from lakehouse_to_rag_spark.sources.dirswap import (
+    recover,
+    staging_path,
+    swap_in,
+)
 
 
 def _delta_available(spark: SparkSession) -> bool:
@@ -77,44 +52,7 @@ def write_layer(
 
 def read_layer(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
-    df = spark.read.format(fmt).load(path)
-    # layers maintained by the bucketed upsert (below) carry a hidden
-    # `_kb=<n>` partition directory level; readers see the layer's
-    # logical schema, never the maintenance key. Only the
-    # directory-derived partition column is hidden — a layer whose
-    # DATA happens to contain a `_kb` column has no `_kb=` subdirs.
-    if _KB_COL in df.columns and _kb_partition_dirs(path):
-        df = df.drop(_KB_COL)
-    return df
-
-
-# Reserved partition-column name for the key-bucketed upsert layout.
-_KB_COL = "_kb"
-
-
-def _kb_partition_dirs(path: str) -> list[str]:
-    """The `_kb=<n>` partition dirs of a bucketed layer ([] for flat
-    layouts / missing paths)."""
-    import os
-
-    try:
-        return sorted(
-            n for n in os.listdir(path)
-            if n.startswith(f"{_KB_COL}=")
-            and os.path.isdir(os.path.join(path, n))
-        )
-    except OSError:
-        return []
-
-
-def _kb_col(key_cols: list[str], n_kb: int):
-    """Deterministic maintenance bucket of a row's key: xxhash64 over
-    the key columns, mod n_kb. Deterministic (guide §2.5: retried
-    tasks must reproduce the row-to-partition assignment) and
-    key-functional, so a key lives in exactly one bucket forever."""
-    return F.pmod(
-        F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_kb)
-    ).cast("int")
+    return spark.read.format(fmt).load(path)
 
 
 def upsert_by_key(
@@ -123,7 +61,6 @@ def upsert_by_key(
     updates: DataFrame,
     key_cols: list[str],
     fmt: str | None = None,
-    n_kb: int | None = None,
 ) -> str:
     """Keyed upsert into a layer — the incrementality the reference
     lacks (it full-overwrites every run, etl.py:113/137/242; SURVEY.md
@@ -132,35 +69,15 @@ def upsert_by_key(
     With delta-spark present this is a real `MERGE INTO` (file-level
     rewrite of only touched files). The parquet fallback reads the
     existing layer, anti-joins away rows whose key is being replaced,
-    unions the updates, and atomically swaps the directory — a full
-    rewrite, correct but O(layer); the docstring-level contract (same
-    keys in → replaced, new keys in → appended) is identical, so
-    callers are delta-ready.
-
-    ``n_kb`` (r14, guide §6 — VERDICT r13 task 5) opts the parquet
-    fallback into a KEY-BUCKETED layout: rows live under hidden
-    ``_kb=<xxhash64(key) % n_kb>`` partition dirs (``read_layer``
-    hides the column), and an upsert rewrites ONLY the buckets the
-    batch's keys hash to — O(batch/n_kb · layer) instead of O(layer),
-    the parquet-era analogue of MERGE's file-level rewrite. Each
-    touched bucket swaps with the same two-rename discipline as the
-    flat path (recovered per-bucket by ``_recover_dir_swap``), so a
-    crash mid-upsert leaves SOME buckets upserted and the rest
-    untouched — a coarser window than the flat layout's all-or-
-    nothing swap, converged by the single-writer replay contract
-    (re-running the same upsert is idempotent per key; the medallion
-    caller additionally orders its commit-marker layer last).
-    A flat layer is migrated to the bucketed layout on its first
-    ``n_kb`` upsert (one full rewrite, after which rewrites prune);
-    passing ``n_kb=None`` on a bucketed layer keeps the layout but
-    rewrites every bucket. Delta MERGE ignores ``n_kb`` (the log
-    already prunes at file level).
+    unions the updates, and publishes the result with
+    ``sources.dirswap.swap_in`` (after ``recover`` repairs any earlier
+    interrupted swap) — a full rewrite, correct but O(layer); the
+    docstring-level contract (same keys in → replaced, new keys in →
+    appended) is identical, so callers are delta-ready.
     """
     import os
-    import shutil
-    import uuid
 
-    _recover_dir_swap(path)
+    recover(path)
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
     if fmt == "delta":
         from delta.tables import DeltaTable  # type: ignore
@@ -176,12 +93,6 @@ def upsert_by_key(
         )
         return fmt
 
-    kb_dirs = _kb_partition_dirs(path)
-    if n_kb is not None or kb_dirs:
-        return _upsert_bucketed(
-            spark, path, updates, key_cols, fmt,
-            n_kb=n_kb or len(kb_dirs) or 16, kb_dirs=kb_dirs,
-        )
     if not os.path.exists(path):
         updates.write.format(fmt).save(path)
         return fmt
@@ -189,108 +100,9 @@ def upsert_by_key(
     keys = updates.select(*key_cols).distinct()
     kept = existing.join(keys, key_cols, "left_anti")
     merged = kept.unionByName(updates)
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
+    tmp = staging_path(path)
     merged.write.format(fmt).save(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return fmt
-
-
-def _upsert_bucketed(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    fmt: str,
-    n_kb: int,
-    kb_dirs: list[str],
-) -> str:
-    """Parquet-fallback upsert into the key-bucketed layout (see
-    ``upsert_by_key``). The batch's touched buckets are computed from
-    its keys (bounded by n_kb), only those ``_kb=N`` dirs are read
-    (partition-pruned scan), merged, rewritten to a sibling tmp, and
-    swapped per bucket. Untouched buckets' files are not opened, read
-    or rewritten — the file-count/pruning evidence is pinned by
-    tests/test_sources.py."""
-    import os
-    import shutil
-    import uuid
-
-    kb = _kb_col(key_cols, n_kb)
-    up = updates.withColumn(_KB_COL, kb)
-    if not os.path.exists(path):
-        up.write.format(fmt).partitionBy(_KB_COL).save(path)
-        return fmt
-    if not kb_dirs:
-        # flat layer: one-time migration — full rewrite into the
-        # bucketed layout with the same atomic root swap as the flat
-        # upsert (after this, every upsert prunes)
-        existing = spark.read.format(fmt).load(path)
-        keys = updates.select(*key_cols).distinct()
-        kept = existing.join(keys, key_cols, "left_anti")
-        merged = kept.unionByName(updates).withColumn(_KB_COL, kb)
-        tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
-        merged.write.format(fmt).partitionBy(_KB_COL).save(tmp)
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        return fmt
-    # existing bucket count wins: the bucket function must match the
-    # layout on disk or pruning would read the wrong dirs
-    # recover remnants for EVERY bucket, not just this batch's: a
-    # crash between a previous upsert's two renames leaves that bucket
-    # dir missing with only its ._old_ sibling — readers would silently
-    # lose the bucket until something touched it again
-    import glob as _glob
-
-    for rem in _glob.glob(
-        os.path.join(_glob.escape(path), f"{_KB_COL}=*._old_*")
-    ) + _glob.glob(
-        os.path.join(_glob.escape(path), f"{_KB_COL}=*._compact_*")
-    ):
-        base = rem.split("._old_")[0].split("._compact_")[0]
-        _recover_dir_swap(base)
-    kb_dirs = _kb_partition_dirs(path)  # recovery may have restored one
-    touched = sorted(
-        r[_KB_COL] for r in up.select(_KB_COL).distinct().collect()
-    )
-    if not touched:  # empty batch: nothing to rewrite
-        return fmt
-    existing = (
-        spark.read.format(fmt)
-        .option("basePath", path)
-        .load([os.path.join(path, f"{_KB_COL}={b}") for b in touched
-               if f"{_KB_COL}={b}" in kb_dirs])
-        if any(f"{_KB_COL}={b}" in kb_dirs for b in touched)
-        else None
-    )
-    keys = updates.select(*key_cols).distinct()
-    merged = up
-    if existing is not None:
-        kept = existing.join(keys, key_cols, "left_anti")
-        merged = kept.unionByName(up.select(*kept.columns))
-    tmp = f"{path}__upsert_{uuid.uuid4().hex[:8]}"
-    merged.write.format(fmt).partitionBy(_KB_COL).save(tmp)
-    for b in touched:
-        src = os.path.join(tmp, f"{_KB_COL}={b}")
-        dst = os.path.join(path, f"{_KB_COL}={b}")
-        if not os.path.exists(src):
-            # a touched bucket can legitimately come out empty only if
-            # every one of its rows was replaced by nothing — not
-            # reachable (updates rows land in their own bucket), but
-            # never leave a stale bucket behind if it ever becomes so
-            continue
-        if os.path.exists(dst):
-            old = f"{dst}._old_{uuid.uuid4().hex[:8]}"
-            os.rename(dst, old)
-            os.rename(src, dst)
-            shutil.rmtree(old)
-        else:
-            os.rename(src, dst)
-    shutil.rmtree(tmp, ignore_errors=True)
+    swap_in(tmp, path)
     return fmt
 
 
@@ -427,8 +239,8 @@ def compact_layer(
 ) -> int:
     """Small-file compaction: rewrite a layer into ``target_files``
     files (default: one per ``target_file_bytes`` of input, min 1)
-    with an atomic directory swap. Streaming/incremental sinks accrete many small
-    files; scans then pay per-file open cost and tiny row groups
+    with an atomic directory swap (``sources.dirswap``).
+    Streaming/incremental sinks accrete many small files; scans then pay per-file open cost and tiny row groups
     defeat pruning — periodic compaction is the standard fix. Uses
     coalesce (no shuffle) since output count only shrinks. Returns
     the file count written.
@@ -439,12 +251,9 @@ def compact_layer(
     ``operators.similarity.compact_ivf_index`` for those.
     """
     import math
-    import os
     import pathlib
-    import shutil
-    import uuid
 
-    _recover_dir_swap(path)
+    recover(path)
     fmt = fmt or ("delta" if _delta_available(spark) else "parquet")
     df = spark.read.format(fmt).load(path)
     if target_files is None:
@@ -454,7 +263,7 @@ def compact_layer(
             if f.is_file()
         )
         target_files = max(1, math.ceil(size / target_file_bytes))
-    tmp = f"{path.rstrip('/')}._compact_{uuid.uuid4().hex[:8]}"
+    tmp = staging_path(path)
     # coalesce narrows without a shuffle; growing the file count (re-
     # splitting an over-compacted layer) genuinely needs repartition
     parts = df.rdd.getNumPartitions()
@@ -464,10 +273,7 @@ def compact_layer(
         else df.repartition(target_files)
     )
     sized.write.format(fmt).mode("overwrite").save(tmp)
-    old = f"{path.rstrip('/')}._old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    swap_in(tmp, path)
     n = len(
         [
             f

@@ -604,54 +604,31 @@ def stream_scd2_sink(
     ledger land in one atomic directory rename. Any crash leaves
     either the old consistent (dim, ledger) pair — replay re-applies
     — or the new one — replay skips; the one between-renames window
-    where neither is at ``dim_path`` is repaired by the remnant
-    recovery pass at the start of every batch (the
-    ``_recover_compact_remnants`` contract — without it a crash
-    there would silently re-bootstrap from one batch). A
+    where neither is at ``dim_path`` is repaired by
+    ``sources.dirswap.recover`` at the start of every batch (without
+    it a crash there would silently re-bootstrap from one batch); the
+    new pair is published with ``swap_in``. A
     whole-stream rerun from a fresh checkpoint is likewise a no-op. The upstream contract is
     the CDC one ``scd2_apply_changes`` documents: batches arrive in
     event-time order per key. Returns the started StreamingQuery."""
     import json
     import os
-    import shutil
-    import uuid
 
     from lakehouse_to_rag_spark.operators.events import (
         scd2_apply_changes,
         scd2_dimension,
     )
-
-    def _recover_swap_remnants() -> None:
-        """Crash recovery for the two-rename swap below — the
-        `_recover_compact_remnants` contract (similarity.py) applied
-        to the dimension directory. Three unambiguous states:
-        ``__v_*`` partials died before their first rename (old dim
-        intact → discard); ``dim_path`` missing with ``__old_*``
-        present is the between-renames window (the old dir is
-        byte-complete → rename back — without this, a restart in that
-        window would silently BOOTSTRAP from one batch and lose all
-        history); both present is death before cleanup (new dim
-        serves → delete old)."""
-        import glob
-
-        base = dim_path.rstrip("/")
-        pat = glob.escape(base)
-        for t in glob.glob(f"{pat}__v_*"):
-            shutil.rmtree(t, ignore_errors=True)
-        olds = sorted(glob.glob(f"{pat}__old_*"))
-        if olds:
-            if not os.path.exists(base):
-                # single-writer: at most one __old_ can exist here
-                os.rename(olds[0], base)
-            else:
-                for o in olds:
-                    shutil.rmtree(o, ignore_errors=True)
+    from lakehouse_to_rag_spark.sources.dirswap import (
+        recover,
+        staging_path,
+        swap_in,
+    )
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        _recover_swap_remnants()
+        recover(dim_path)
         applied: set[int] = set()
         lpath = os.path.join(dim_path, "_ledger.json")
         if os.path.exists(lpath):
@@ -668,19 +645,13 @@ def stream_scd2_sink(
             new_dim = scd2_dimension(
                 batch, key_col, attr_col, ts_col, tiebreak_col
             )
-        tmp = f"{dim_path}__v_{uuid.uuid4().hex[:8]}"
+        tmp = staging_path(dim_path)
         # the write ACTION reads the old files (still in place), so
         # the read-modify-write never overlaps its own input
         new_dim.write.parquet(tmp)
         with open(os.path.join(tmp, "_ledger.json"), "w") as f:
             json.dump(sorted(applied | {int(batch_id)}), f)
-        if os.path.exists(dim_path):
-            old = f"{dim_path}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(dim_path, old)
-            os.rename(tmp, dim_path)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, dim_path)
+        swap_in(tmp, dim_path)
 
     writer = (
         events.writeStream.foreachBatch(_apply)
@@ -727,12 +698,12 @@ def stream_chunk_refresh_sink(
     and enqueues regress-then-redo work (the manifest converges, the
     queue gets noise) — single-writer, one checkpoint per
     manifest/work pair is the operating contract, as for every
-    ledgered sink here. The
-    manifest update itself is an atomic directory swap (the
-    ``upsert_by_key`` parquet convention). Chunk BODIES never travel:
-    the embed consumer re-reads text by (doc, chunk_index) from the
-    current corpus; hashes and indexes only. Returns the started
-    StreamingQuery."""
+    ledgered sink here. The manifest update itself is an atomic
+    directory swap (``upsert_by_key`` through ``sources.dirswap``),
+    and each batch runs ``dirswap.recover`` on the manifest before
+    reading it. Chunk BODIES never travel: the embed consumer
+    re-reads text by (doc, chunk_index) from the current corpus;
+    hashes and indexes only. Returns the started StreamingQuery."""
     import os
 
     from pyspark.errors import AnalysisException
@@ -773,11 +744,9 @@ def stream_chunk_refresh_sink(
         # between-renames window the read would raise, this batch
         # would treat the manifest as absent, and the fresh write
         # would orphan (then lose) every other doc's rows
-        from lakehouse_to_rag_spark.sources.lakehouse import (
-            _recover_dir_swap,
-        )
+        from lakehouse_to_rag_spark.sources.dirswap import recover
 
-        _recover_dir_swap(manifest_path)
+        recover(manifest_path)
         try:
             manifest = spark.read.parquet(manifest_path)
         except AnalysisException:

@@ -558,7 +558,7 @@ class TestTrainingShards:
         """A staging dir left by a pre-swap crash is discarded; the
         between-renames window (layer missing, __old_ present) is
         rolled back — both heal on the next write call (the
-        _recover_dir_swap contract the writer rides)."""
+        dirswap.recover contract the writer rides)."""
         import os
 
         from lakehouse_to_rag_spark.operators.curation import (

@@ -1857,10 +1857,15 @@ def test_training_shards_cumsum_is_layout_independent(
             r, cum, token_budget
         )
         cum += r["n_tokens"]
-    # shards are contiguous from 0 with no gaps
-    shards = [r["shard"] for r in rows]
-    assert shards[0] == 0
-    assert all(b - a in (0, 1) for a, b in zip(shards, shards[1:]))
+    # shards start at 0 and advance by exactly the budget boundaries
+    # the earlier doc crosses: assignment is by FIRST token, so a doc
+    # longer than the budget legitimately skips shard ids
+    assert rows[0]["shard"] == 0
+    cum = 0
+    for a, b in zip(rows, rows[1:]):
+        step = (cum + a["n_tokens"]) // token_budget - cum // token_budget
+        assert b["shard"] - a["shard"] == step, (a, b, cum, token_budget)
+        cum += a["n_tokens"]
 
     # 2. layout independence: a different partitioning of the SAME
     # input yields the identical (id -> shard) map
@@ -1870,6 +1875,23 @@ def test_training_shards_cumsum_is_layout_independent(
     assert {r["doc_id"]: r["shard"] for r in out} == {
         r["doc_id"]: r["shard"] for r in other
     }
+
+
+def test_training_shards_long_doc_skips_shard_ids(spark):
+    """Pinned instance of the gap law above. With budget 1 the shuffle
+    order is "c c", "b", "a a a": the 2-token doc spans shards 0..1
+    but is assigned only shard 0, so "b" starts at shard 2 and shard 1
+    holds no doc (ids are not dense)."""
+    from lakehouse_to_rag_spark.operators.curation import (
+        training_shards_assign,
+    )
+
+    base = spark.createDataFrame(
+        list(enumerate(["a a a", "b", "c c"])), "doc_id long, text string"
+    )
+    out = training_shards_assign(base, token_budget=1).collect()
+    rows = sorted(out, key=lambda r: (r["shuffle_key"], r["doc_id"]))
+    assert [r["shard"] for r in rows] == [0, 2, 3]
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

@@ -97,115 +97,6 @@ def test_upsert_by_key(spark, sf_dir, tmp_path):
     assert after.filter(F.col("doc_id") == 10_000_000).count() == 1
 
 
-def test_upsert_key_bucketed_prunes_untouched_buckets(spark, sf_dir, tmp_path):
-    """r14 (VERDICT r13 task 5): the key-bucketed parquet upsert must
-    (a) hide the `_kb` maintenance column from readers, (b) produce
-    exactly the rows the flat upsert produces, and (c) rewrite ONLY
-    the bucket dirs the batch's keys hash to — untouched buckets keep
-    their files byte-for-byte (inode + mtime pinned). A flat layer
-    migrates on its first bucketed upsert."""
-    import os
-    import pathlib
-
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        upsert_by_key,
-    )
-    from lakehouse_to_rag_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    flat, bkt = str(tmp_path / "flat"), str(tmp_path / "bkt")
-    upsert_by_key(spark, flat, docs, ["doc_id"])
-    upsert_by_key(spark, bkt, docs, ["doc_id"], n_kb=8)
-    assert sorted(
-        os.path.basename(p) for p in pathlib.Path(bkt).glob("_kb=*")
-    ) == [f"_kb={i}" for i in range(8)]
-    # (a) hidden column + (b) equality with the flat layout
-    b0 = read_layer(spark, bkt)
-    assert "_kb" not in b0.columns
-    assert sorted(map(tuple, b0.collect())) == sorted(
-        map(tuple, read_layer(spark, flat).collect())
-    )
-
-    def fstate(root):
-        return {
-            str(f): (f.stat().st_ino, f.stat().st_mtime_ns)
-            for f in pathlib.Path(root).rglob("*.parquet")
-        }
-
-    before = fstate(bkt)
-    updates = spark.createDataFrame(
-        [(0, "REPLACED", "srcX"), (10_000_000, "NEW", "srcX")],
-        ["doc_id", "text", "source"],
-    )
-    upsert_by_key(spark, flat, updates, ["doc_id"])
-    upsert_by_key(spark, bkt, updates, ["doc_id"], n_kb=8)
-    # (b) equality again after the incremental upsert
-    assert sorted(map(tuple, read_layer(spark, bkt).collect())) == sorted(
-        map(tuple, read_layer(spark, flat).collect())
-    )
-    # (c) at most 2 of 8 buckets rewritten; every other bucket's files
-    # are the SAME files (not rewritten, not even touched)
-    after = fstate(bkt)
-    changed_dirs = {
-        pathlib.Path(p).parent.name
-        for p in set(before) ^ set(after)
-    } | {
-        pathlib.Path(p).parent.name
-        for p in set(before) & set(after)
-        if before[p] != after[p]
-    }
-    assert 1 <= len(changed_dirs) <= 2, changed_dirs
-    untouched = [d for d in (f"_kb={i}" for i in range(8))
-                 if d not in changed_dirs]
-    assert len(untouched) >= 6
-    # legacy migration: a flat layer's first n_kb upsert buckets it
-    upsert_by_key(spark, flat, updates, ["doc_id"], n_kb=8)
-    assert pathlib.Path(flat, "_kb=0").is_dir()
-    assert sorted(map(tuple, read_layer(spark, flat).collect())) == sorted(
-        map(tuple, read_layer(spark, bkt).collect())
-    )
-
-
-def test_upsert_key_bucketed_recovers_crashed_bucket_swap(
-    spark, sf_dir, tmp_path
-):
-    """Per-bucket two-rename crash window: a bucket dir renamed to
-    `._old_` with the new dir never landing must be restored by the
-    NEXT upsert even when that upsert touches OTHER buckets — readers
-    would otherwise silently lose the bucket."""
-    import os
-    import pathlib
-
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        upsert_by_key,
-    )
-    from lakehouse_to_rag_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source"
-    )
-    path = str(tmp_path / "layer")
-    upsert_by_key(spark, path, docs, ["doc_id"], n_kb=4)
-    want = sorted(map(tuple, read_layer(spark, path).collect()))
-    # simulate the between-renames crash on bucket 2
-    os.rename(
-        os.path.join(path, "_kb=2"), os.path.join(path, "_kb=2._old_dead1")
-    )
-    assert not pathlib.Path(path, "_kb=2").exists()
-    # an upsert touching a single other bucket must first repair it
-    one = spark.createDataFrame(
-        [(0, "REPLACED", "srcX")], ["doc_id", "text", "source"]
-    )
-    upsert_by_key(spark, path, one, ["doc_id"], n_kb=4)
-    got = sorted(map(tuple, read_layer(spark, path).collect()))
-    want = [t if t[0] != 0 else (0, "REPLACED", "srcX") for t in want]
-    assert got == sorted(want)
-
-
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     """Tables bucketed on the join key join WITHOUT a shuffle: the
     write-time bucketing replaces the per-query Exchange (the
