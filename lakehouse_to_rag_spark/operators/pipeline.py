@@ -162,12 +162,16 @@ def run_medallion_incremental(
             # upsert's tasks back-fill the first's write/commit tail).
             from concurrent.futures import ThreadPoolExecutor
 
+            from lakehouse_to_rag_spark.session import pool_task
+
             with ThreadPoolExecutor(max_workers=2) as pool:
                 fs = pool.submit(
-                    upsert_by_key, spark, paths["silver"], fresh, ["url"]
+                    pool_task(spark, upsert_by_key),
+                    spark, paths["silver"], fresh, ["url"],
                 )
                 fg = pool.submit(
-                    upsert_by_key, spark, paths["gold"], gold_b,
+                    pool_task(spark, upsert_by_key),
+                    spark, paths["gold"], gold_b,
                     ["url", "chunk_index"],
                 )
                 fs.result()

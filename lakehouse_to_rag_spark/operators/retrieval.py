@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def _doc_terms(
@@ -214,15 +215,39 @@ def write_bm25_index(
     # above already materialized the `narrow` checkpoint both ride).
     from concurrent.futures import ThreadPoolExecutor
 
+    from lakehouse_to_rag_spark.session import pool_task
+
+    spark = docs.sparkSession
     ids_df = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id")
     )
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fs = pool.submit(write_layer, stats_df, f"{path}/_stats")
-        fi = pool.submit(write_layer, ids_df, f"{path}/_ids")
+        fs = pool.submit(
+            pool_task(spark, write_layer), stats_df, f"{path}/_stats"
+        )
+        fi = pool.submit(pool_task(spark, write_layer), ids_df, f"{path}/_ids")
         fs.result()
         fi.result()
     return fmt
+
+
+def _data_names(dirpath: str) -> list[str] | None:
+    """Names of a layer dir's data entries — everything but the
+    ``_``/``.``-prefixed ones Spark skips (``_SUCCESS``, ``.crc``
+    sidecars, ``_stats``-style control tables) — or None when the dir
+    is missing or is a delta layer: a delta layer's live file set is
+    the LOG's, not the dir listing's (tombstoned files linger), so
+    footers can't be trusted and callers fall back to the format-aware
+    Spark read."""
+    import os
+
+    try:
+        names = os.listdir(dirpath)
+    except OSError:
+        return None
+    if "_delta_log" in names:
+        return None
+    return [n for n in names if not n.startswith(("_", "."))]
 
 
 def _parquet_files(dirpath: str) -> list[str] | None:
@@ -231,25 +256,11 @@ def _parquet_files(dirpath: str) -> list[str] | None:
     callers then fall back to a Spark read."""
     import os
 
-    try:
-        names = os.listdir(dirpath)
-    except OSError:
+    names = _data_names(dirpath)
+    if not names or not all(n.endswith((".parquet", ".crc")) for n in names):
         return None
-    if "_delta_log" in names:
-        # a delta layer's live file set is the LOG's, not the dir
-        # listing's (tombstoned files linger) — footers can't be
-        # trusted; callers fall back to the format-aware Spark read
-        return None
-    files = [
-        os.path.join(dirpath, n)
-        for n in names
-        if n.endswith(".parquet") and not n.startswith((".", "_"))
-    ]
-    ok = all(
-        n.startswith(("_", ".")) or n.endswith((".parquet", ".crc"))
-        for n in names
-    )
-    return files if files and ok else None
+    files = [os.path.join(dirpath, n) for n in names if n.endswith(".parquet")]
+    return files or None
 
 
 def _read_stats_row(spark, sdir: str):
@@ -1070,7 +1081,13 @@ def build_rag_indexes(
                  in-memory frames, so the manifest proves the write):
                  one row per (index, part) with its row count, plus
                  the bm25 _stats row — the registrable, oracle-able
-                 summary of a correct build.
+                 summary of a correct build. The counts are summed
+                 from the written files' parquet footers on the
+                 driver and n_docs is the _stats row
+                 (``_index_manifest``), so the read-back launches no
+                 Spark job; a layout that is not plain parquet
+                 (delta, a stray file) falls back to a Spark read of
+                 the same layer.
 
     Returns the manifest DataFrame: (index STRING, part BIGINT,
     n_rows BIGINT). Parts: ivf cluster ids; bm25 part -1 = total
@@ -1080,7 +1097,6 @@ def build_rag_indexes(
     from lakehouse_to_rag_spark.functions.chunker import fixed_stride_chunks
     from lakehouse_to_rag_spark.operators.similarity import write_ivf_index
     from lakehouse_to_rag_spark.operators.text_analysis import embed_hashed_tf
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
     spark = docs.sparkSession
     base = docs.filter(F.col(text_col).isNotNull())
@@ -1128,12 +1144,15 @@ def build_rag_indexes(
     # sequential because driver code calls them sequentially; the
     # second index's tasks back-fill executors idled by the first's
     # stage tails and single-task stats/centroid writes). Each build's
-    # exceptions surface via .result().
+    # exceptions surface via .result(); pool_task keeps the caller's
+    # job group on the pool's jobs.
     from concurrent.futures import ThreadPoolExecutor
+
+    from lakehouse_to_rag_spark.session import pool_task
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_bm25 = pool.submit(
-            write_bm25_index,
+            pool_task(spark, write_bm25_index),
             chunks,
             f"{base_path}/bm25",
             n_buckets=n_buckets,
@@ -1141,7 +1160,7 @@ def build_rag_indexes(
             text_col="chunk",
         )
         f_ivf = pool.submit(
-            write_ivf_index,
+            pool_task(spark, write_ivf_index),
             emb,
             f"{base_path}/ivf",
             num_centroids=num_centroids,
@@ -1151,29 +1170,74 @@ def build_rag_indexes(
         f_bm25.result()
         f_ivf.result()
 
-    ivf_counts = (
-        read_layer(spark, f"{base_path}/ivf")
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .select(
-            F.lit("ivf").alias("index"),
-            F.col("cluster").cast("long").alias("part"),
-            F.col("n_rows").cast("long").alias("n_rows"),
-        )
+    return _index_manifest(spark, base_path)
+
+
+_MANIFEST_SCHEMA = T.StructType(
+    [
+        T.StructField("index", T.StringType(), False),
+        T.StructField("part", T.LongType()),
+        T.StructField("n_rows", T.LongType()),
+    ]
+)
+
+
+def _partition_rowcounts(root: str, col: str) -> dict[int, int] | None:
+    """Row count per ``{col}=N/`` partition dir of a plain-parquet
+    layout, summed from file footers on the driver (no Spark job).
+    Empty partitions are omitted, as a groupBy over the rows would.
+    None when ``root`` or any partition dir is not plain parquet
+    (``_data_names``/``_parquet_files``' rule: a ``_delta_log``, a
+    stray file) or a data entry is not a ``{col}=N`` dir."""
+    import os
+
+    names = _data_names(root)
+    if names is None:
+        return None
+    counts: dict[int, int] = {}
+    for n in names:
+        key, sep, val = n.partition("=")
+        if key != col or not sep or not val.lstrip("-").isdecimal():
+            return None
+        rows = _parquet_rowcount(os.path.join(root, n))
+        if rows is None:
+            return None
+        if rows:
+            counts[int(val)] = rows
+    return counts
+
+
+def _index_manifest(spark, base_path: str) -> DataFrame:
+    """``build_rag_indexes``' manifest, read back from the written
+    layouts: ivf per-cluster counts and the bm25 posting total are
+    summed from parquet footers, n_docs comes from the ``_stats`` row
+    (``_read_stats_row``). A layout that is not plain parquet falls
+    back to the Spark read-back it replaces (groupBy/count over the
+    layer). The result is a driver-local frame, so collecting it
+    launches no job."""
+    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    ivf_dir, bm25_dir = f"{base_path}/ivf", f"{base_path}/bm25"
+    ivf = _partition_rowcounts(ivf_dir, "cluster")
+    if ivf is None:
+        ivf = {
+            int(r[0]): int(r[1])
+            for r in read_layer(spark, ivf_dir)
+            .groupBy("cluster")
+            .agg(F.count(F.lit(1)))
+            .collect()
+        }
+    bm25 = _partition_rowcounts(bm25_dir, "bucket")
+    n_post = (
+        sum(bm25.values())
+        if bm25 is not None
+        else read_layer(spark, bm25_dir).count()
     )
-    bm25_total = read_layer(spark, f"{base_path}/bm25").agg(
-        F.count(F.lit(1)).alias("n_rows")
-    ).select(
-        F.lit("bm25").alias("index"),
-        F.lit(-1).cast("long").alias("part"),
-        F.col("n_rows").cast("long").alias("n_rows"),
-    )
-    stats_docs = read_layer(spark, f"{base_path}/bm25/_stats").select(
-        F.lit("stats").alias("index"),
-        F.lit(-1).cast("long").alias("part"),
-        F.col("n_docs").cast("long").alias("n_rows"),
-    )
-    return ivf_counts.unionByName(bm25_total).unionByName(stats_docs)
+    n_docs = _read_stats_row(spark, f"{bm25_dir}/_stats")["n_docs"]
+    rows = [("ivf", c, n) for c, n in sorted(ivf.items())]
+    rows += [("bm25", -1, n_post), ("stats", -1, n_docs)]
+    return local_df(spark, rows, _MANIFEST_SCHEMA)
 
 
 def retrieval_metrics(

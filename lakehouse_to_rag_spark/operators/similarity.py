@@ -201,22 +201,33 @@ def ivf_assign(
     k-means would refine them — the *plumbing* is identical). Returns
     (centroids, corpus tagged with nearest-centroid cluster id).
 
+    The seed rows are collected once (one orderBy+limit over
+    ``corpus``) and the returned centroid frame is built from those
+    collected rows — a driver-local ``LocalRelation`` with the
+    (centroid_id, cvec) schema of the seed query — so neither a probe
+    broadcast nor a ``_centroids`` write re-runs the orderBy+limit
+    over the corpus. The assignment itself stays lazy over
+    ``corpus``: a caller that consumes it after this function returns
+    evaluates ``corpus`` a second time unless it passed a
+    materialized frame (``write_ivf_index`` does).
+
     Caveat on duplicated corpora: raw first-k-rows seeds can repeat a
     vector, collapsing effective cluster count (correctness holds,
     partition balance degrades). The trained quantizer
     (``kmeans_centroids``) seeds from the first k DISTINCT vectors
     and is the production path for such data.
     """
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
     cent_src = (
         corpus.orderBy(F.col(id_col)).limit(num_centroids).select(
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
         )
     )
-    cent_rows = [
-        (int(r[0]), [float(x) for x in r[1]]) for r in cent_src.collect()
-    ]
+    seeds = cent_src.collect()
+    cent_rows = [(int(r[0]), [float(x) for x in r[1]]) for r in seeds]
     _assert_nonzero_centroids(cent_rows, "ivf_assign")
-    cent = F.broadcast(cent_src)
+    cent = F.broadcast(local_df(corpus.sparkSession, seeds, cent_src.schema))
     assigned = _gemm_assign(corpus, cent_rows, id_col, vec_col)
     return cent, assigned
 
@@ -305,6 +316,17 @@ def ivf_topk(
     return _score_probed(assigned, probes, k, id_col, vec_col)
 
 
+def _is_checkpoint(df: DataFrame) -> bool:
+    """True when ``df`` is a (lazy or eager) checkpoint: its plan is a
+    bare ``LogicalRDD`` over a persisted RDD, so reading it again
+    recomputes nothing upstream of it."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return False
+    level = plan.rdd().getStorageLevel()
+    return level.useMemory() or level.useDisk()
+
+
 def write_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -329,7 +351,15 @@ def write_ivf_index(
     ``cluster=N/`` directories and higher recall at equal nprobe; the
     probe path ``ivf_topk_from_index`` reads either layout unchanged
     because the quantizer is just the persisted ``_centroids``
-    table)."""
+    table).
+
+    The untrained path evaluates ``corpus`` exactly once: its
+    (id, vector) projection is materialized by one eager
+    ``localCheckpoint`` (skipped when ``corpus`` already is a
+    checkpoint — ``_is_checkpoint``), the quantizer seeds and the
+    cluster assignment both read that checkpoint, and ``_centroids``
+    is written from the seed rows already on the driver (one file, as
+    the orderBy+limit it replaces wrote)."""
     from lakehouse_to_rag_spark.sources.lakehouse import write_layer
 
     if trained:
@@ -344,7 +374,12 @@ def write_ivf_index(
         )
         assigned = _gemm_assign(corpus, cent_rows, id_col, vec_col)
     else:
+        if not _is_checkpoint(corpus):
+            corpus = corpus.select(id_col, vec_col).localCheckpoint(
+                eager=True
+            )
         cent, assigned = ivf_assign(corpus, num_centroids, id_col, vec_col)
+        cent = cent.coalesce(1)
     fmt = write_layer(assigned, path, partition_by=["cluster"])
     write_layer(cent.select("centroid_id", "cvec"), f"{path}/_centroids")
     return fmt

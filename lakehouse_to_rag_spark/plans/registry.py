@@ -8724,10 +8724,14 @@ def rag_read_path_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         # builds (guide §2.6 — the build_rag_indexes discipline)
         from concurrent.futures import ThreadPoolExecutor
 
+        from lakehouse_to_rag_spark.session import pool_task
+
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(write_bm25_index, store, f"{staging}/bm25")
+            fb = pool.submit(
+                pool_task(spark, write_bm25_index), store, f"{staging}/bm25"
+            )
             fv = pool.submit(
-                write_ivf_index, emb_store, f"{staging}/ivf",
+                pool_task(spark, write_ivf_index), emb_store, f"{staging}/ivf",
                 num_centroids=16,
             )
             fb.result()

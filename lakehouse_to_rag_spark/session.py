@@ -45,6 +45,23 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def pool_task(spark: SparkSession, fn):
+    """``fn`` wrapped for a ``ThreadPoolExecutor.submit``: under
+    PySpark's pinned-thread mode a pool thread's Spark jobs otherwise
+    carry none of the caller's local properties (job group,
+    description, scheduler pool), so ``cancelJobGroup`` cannot stop
+    them and per-group accounting misses them. Wrap once per submit:
+    each wrapper holds its own copy of the properties, and two threads
+    sharing one copy would see each other's SQL execution ids. With
+    pinned threads off (``PYSPARK_PIN_THREAD=false``) pyspark does no
+    hand-off and returns its argument instead of a decorator, so
+    ``fn`` is returned unwrapped."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return fn if wrap is spark else wrap(fn)
+
+
 _BLAS_ENV_VARS = (
     "OPENBLAS_NUM_THREADS",
     "OMP_NUM_THREADS",

@@ -14,6 +14,8 @@ given (e.g. source / date) so downstream reads prune partitions;
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -24,14 +26,27 @@ from lakehouse_to_rag_spark.sources.dirswap import (
 )
 
 
+# SparkContext -> whether delta-spark is on its classpath. The
+# classpath cannot change within a context, and the probe costs a py4j
+# round trip (plus a converted ClassNotFoundException when delta is
+# absent, ~20 ms) on every read_layer/write_layer; a new context
+# probes again.
+_DELTA_BY_CONTEXT: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
 def _delta_available(spark: SparkSession) -> bool:
-    try:
-        # py4j resolves attribute chains lazily, so probe the actual
-        # classloader instead of touching spark._jvm.io.delta...
-        spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-        return True
-    except Exception:
-        return False
+    sc = spark.sparkContext
+    found = _DELTA_BY_CONTEXT.get(sc)
+    if found is None:
+        try:
+            # py4j resolves attribute chains lazily, so probe the
+            # actual classloader instead of touching spark._jvm.io...
+            spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
+            found = True
+        except Exception:
+            found = False
+        _DELTA_BY_CONTEXT[sc] = found
+    return found
 
 
 def write_layer(

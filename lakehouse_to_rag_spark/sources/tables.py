@@ -115,10 +115,29 @@ def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
     one slice; even the plain 32-slice write/count pays ~0.5 s of
     parallel worker spin-up for zero parallelism benefit). One slice
     is the right layout for data that is tiny BY CONTRACT; anything
-    unbounded keeps the default path."""
+    unbounded keeps the default path.
+
+    The one rule between this and ``local_df``: rows that Spark jobs
+    write or join take ``tiny_df`` (one slice, one task, one file);
+    rows that are collected or broadcast — where a job per action is
+    the whole cost — take ``local_df``."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
+
+
+def local_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-LOCAL frame for driver-bounded rows (a collected
+    quantizer, a footer-read manifest): built through pandas + Arrow,
+    it plans as a ``LocalRelation``, so ``collect()`` and a broadcast
+    of it launch no Spark job (``tiny_df``'s ``LogicalRDD`` launches
+    one per action; see ``tiny_df`` for which to use). A write of it
+    fans out to up to defaultParallelism files — ``coalesce(1)`` a
+    single-file write."""
+    import pandas as pd
+
+    pdf = pd.DataFrame([tuple(r) for r in rows], columns=schema.names)
+    return spark.createDataFrame(pdf, schema)
 
 
 def load_tables(

@@ -6,6 +6,8 @@ like every other operator."""
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.operators.retrieval import (
@@ -524,6 +526,135 @@ class TestRagIndexBuild:
             ).collect()
         )
         assert vserved == vdirect and vserved
+
+    def test_build_jobs_keep_caller_job_group(self, spark, sf_dir, tmp_path):
+        """Every job the build launches — including those submitted
+        from its thread pools — carries the caller's job group, so
+        cancelJobGroup can stop a build."""
+        from lakehouse_to_rag_spark.operators.retrieval import (
+            build_rag_indexes,
+        )
+
+        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        base = str(tmp_path / "ragidx")
+        _, launched, in_group = _jobs_between_markers(
+            spark,
+            lambda: build_rag_indexes(d, base, num_centroids=8).collect(),
+        )
+        assert launched and launched <= in_group
+
+    def test_manifest_read_from_footers(self, spark, sf_dir, tmp_path):
+        """A fresh build's manifest equals a Spark read-back of the
+        written layout, and collecting it launches no job."""
+        from lakehouse_to_rag_spark.operators.retrieval import (
+            build_rag_indexes,
+        )
+
+        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        base = str(tmp_path / "ragidx")
+        manifest = build_rag_indexes(d, base, num_centroids=8)
+        rows, launched, _ = _jobs_between_markers(spark, manifest.collect)
+        assert launched == set()
+        assert sorted(map(tuple, rows)) == _spark_manifest(spark, base)
+        assert [f.name for f in manifest.schema] == ["index", "part", "n_rows"]
+
+    @pytest.mark.parametrize("plant", ["stray_file", "delta_log"])
+    def test_manifest_falls_back_to_spark_read(
+        self, spark, sf_dir, tmp_path, plant
+    ):
+        """The manifest falls back to a Spark read, and equals it, when
+        the ivf layout is not plain parquet: a cluster dir holding a
+        file the footer path does not recognise (a parquet file
+        without the .parquet suffix — Spark still reads it, so the
+        manifest changes), or a ``_delta_log`` at the ivf root (a
+        delta rewrite leaves tombstoned files in the cluster dirs, so
+        the dir listing is not the live file set)."""
+        import os
+        import shutil
+
+        from lakehouse_to_rag_spark.operators.retrieval import (
+            _index_manifest,
+            build_rag_indexes,
+        )
+
+        d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        base = str(tmp_path / "ragidx")
+        fresh = sorted(
+            map(tuple, build_rag_indexes(d, base, num_centroids=8).collect())
+        )
+        ivf = os.path.join(base, "ivf")
+        if plant == "delta_log":
+            os.mkdir(os.path.join(ivf, "_delta_log"))
+        else:
+            cdir = os.path.join(
+                ivf, min(n for n in os.listdir(ivf) if n.startswith("cluster="))
+            )
+            part = next(n for n in os.listdir(cdir) if n.endswith(".parquet"))
+            shutil.copy(
+                os.path.join(cdir, part), os.path.join(cdir, "part-copy")
+            )
+
+        rows, launched, _ = _jobs_between_markers(
+            spark, lambda: _index_manifest(spark, base).collect()
+        )
+        assert launched  # the Spark fallback ran
+        rows = sorted(map(tuple, rows))
+        assert rows == _spark_manifest(spark, base)
+        assert (rows == fresh) == (plant == "delta_log")
+
+    def test_pool_task_without_pinned_threads(self, spark, monkeypatch):
+        """With pinned threads off, pyspark's thread-target helper hands
+        back the session instead of a decorator; pool_task must then
+        return the callable itself."""
+        from pyspark import SparkContext
+
+        from lakehouse_to_rag_spark.session import pool_task
+
+        def fn(x):
+            return x + 1
+
+        monkeypatch.setattr(SparkContext, "_gateway", object())
+        assert pool_task(spark, fn) is fn
+
+
+def _jobs_between_markers(spark, fn):
+    """Run ``fn`` between two marker jobs under a fresh job group.
+    Returns (fn's result, ids of every job launched between the
+    markers, ids of the jobs carrying the group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+        out = fn()
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    return out, set(range(min(in_group) + 1, max(in_group))), in_group
+
+
+def _spark_manifest(spark, base):
+    """The manifest as Spark jobs compute it from the written layout:
+    per-cluster ivf counts, the bm25 posting total and _stats.n_docs."""
+    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+
+    ivf = (
+        read_layer(spark, f"{base}/ivf")
+        .groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.lit("ivf"), F.col("cluster").cast("long"), "n")
+    )
+    bm25 = read_layer(spark, f"{base}/bm25").agg(F.count(F.lit(1)))
+    stats = read_layer(spark, f"{base}/bm25/_stats").select("n_docs")
+    return sorted(
+        [tuple(r) for r in ivf.collect()]
+        + [("bm25", -1, bm25.collect()[0][0])]
+        + [("stats", -1, stats.collect()[0][0])]
+    )
 
 
 def test_rag_read_path_served_equals_in_memory(spark, sf_dir):

@@ -401,6 +401,96 @@ def test_ivf_index_partition_pruning(spark, sf_dir, tmp_path):
     assert full_idx == full_mem
 
 
+def test_write_ivf_index_evaluates_corpus_once(spark, tmp_path):
+    """The untrained IVF build computes its corpus once: a vector
+    column produced by a counting Python UDF is evaluated exactly once
+    per row across seeding, assignment and the _centroids write, and
+    _centroids holds the first k rows by id, in one file."""
+    import pathlib
+
+    from lakehouse_to_rag_spark.operators.similarity import write_ivf_index
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def vec(i):
+        calls.add(1)
+        return [float(i * 7 % 5) + 1.0, float(i % 3)]
+
+    n, k = 40, 4
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.udf(vec, "array<double>")("id").alias("embedding"),
+    )
+    path = str(tmp_path / "ivf")
+    write_ivf_index(corpus, path, num_centroids=k)
+
+    assert calls.value == n
+    cent = spark.read.parquet(f"{path}/_centroids")
+    assert sorted(tuple(r) for r in cent.collect()) == [
+        (i, vec(i)) for i in range(k)
+    ]
+    assert len(list(pathlib.Path(path, "_centroids").glob("*.parquet"))) == 1
+    assert spark.read.parquet(path).count() == n
+
+
+def test_write_ivf_index_reuses_callers_checkpoint(spark, tmp_path):
+    """A corpus the caller already checkpointed is read as is: the
+    build persists no second copy of it, and its rows are still
+    computed once."""
+    from lakehouse_to_rag_spark.operators.similarity import write_ivf_index
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def vec(i):
+        calls.add(1)
+        return [float(i * 7 % 5) + 1.0, float(i % 3)]
+
+    n = 40
+    corpus = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.udf(vec, "array<double>")("id").alias("embedding"),
+    ).localCheckpoint(eager=False)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    path = str(tmp_path / "ivf")
+    write_ivf_index(corpus, path, num_centroids=4)
+
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    assert calls.value == n
+    assert spark.read.parquet(path).count() == n
+
+
+def test_delta_probe_memoized_per_context(monkeypatch):
+    """The delta classpath probe runs once per SparkContext: a repeat
+    call on the same context skips the JVM round trip, a new context
+    probes again."""
+    from lakehouse_to_rag_spark.sources import lakehouse
+
+    probes = []
+
+    class Ctx:
+        pass
+
+    class Session:
+        def __init__(self, sc):
+            self.sparkContext = sc
+
+        @property
+        def _jvm(self):
+            probes.append(self.sparkContext)
+            raise RuntimeError("no JVM in this test")
+
+    monkeypatch.setattr(
+        lakehouse, "_DELTA_BY_CONTEXT", lakehouse.weakref.WeakKeyDictionary()
+    )
+    a, b = Ctx(), Ctx()
+    assert not lakehouse._delta_available(Session(a))
+    assert not lakehouse._delta_available(Session(a))
+    assert probes == [a]
+    assert not lakehouse._delta_available(Session(b))
+    assert probes == [a, b]
+
+
 def test_s3a_configuration_surface(spark):
     """configure_s3a must wire the MinIO-shaped confs (endpoint, key
     pair, path-style, TLS toggle) onto the LIVE hadoop configuration —
