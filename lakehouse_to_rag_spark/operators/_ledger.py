@@ -14,25 +14,23 @@ Two crash classes threaten it (r13 self-review):
 - death MID scheme write — previously left a half-written ``_scheme``
   directory that *exists* but cannot be read, bricking every
   subsequent batch with an AnalysisException. Fixed here twice over:
-  ``write_scheme`` stages to a ``_scheme__tmp_*`` sibling and
-  ``os.rename``s into place (atomic on POSIX, so the torn state can
-  no longer be created), and ``read_scheme`` treats an unreadable
-  record as ABSENT, routing the caller into the same migrate
-  self-heal as the other crash class instead of raising forever.
+  ``write_scheme`` stages and publishes through the crash-safe
+  ``sources.dirswap`` swap (so the torn state can no longer be
+  created, and a crash mid-replace is repaired by ``recover``, which
+  ``read_scheme`` runs first), and ``read_scheme`` treats an
+  unreadable record as ABSENT, routing the caller into the same
+  migrate self-heal as the other crash class instead of raising
+  forever.
 
 Underscore-prefixed names are hidden from Spark/Hadoop file listings,
-so neither ``_scheme`` nor a stale ``_scheme__tmp_*`` remnant ever
-pollutes a data read; remnants are swept opportunistically on the
-next successful write and dropped wholesale by the migrate/compaction
-directory swaps. Single-writer contract throughout (the ledgers'
-documented ingest-loop discipline).
+so neither ``_scheme`` nor a ``_scheme`` swap remnant ever pollutes a
+data read. Single-writer contract throughout (the ledgers' documented
+ingest-loop discipline).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import SparkSession
 
@@ -99,31 +97,27 @@ def write_scheme(
     spark: SparkSession, table_path: str, fields: dict[str, int]
 ) -> None:
     """Atomically record ``fields`` (int-valued) as the one-row
-    ``{table_path}/_scheme`` parquet: stage under ``_scheme__tmp_*``,
-    then rename into place so no reader can ever observe a
-    half-written record."""
+    ``{table_path}/_scheme`` parquet: staged and published through
+    ``sources.dirswap``, so no reader can ever observe a half-written
+    record, nor a missing one once a record existed."""
+    from lakehouse_to_rag_spark.sources.dirswap import (
+        recover,
+        staging_path,
+        swap_in,
+    )
     from lakehouse_to_rag_spark.sources.lakehouse import write_layer
-
-    # sweep stale staging remnants from earlier crashed writes
-    for name in os.listdir(table_path):
-        if name.startswith("_scheme__tmp_"):
-            shutil.rmtree(os.path.join(table_path, name), ignore_errors=True)
-    tmp = os.path.join(table_path, f"_scheme__tmp_{uuid.uuid4().hex[:8]}")
-    schema = ", ".join(f"{k} int" for k in fields)
     from lakehouse_to_rag_spark.sources.tables import tiny_df
 
+    final = os.path.join(table_path, "_scheme")
+    recover(final)
+    tmp = staging_path(final)
+    schema = ", ".join(f"{k} int" for k in fields)
     write_layer(
         tiny_df(spark, [tuple(fields.values())], schema),
         tmp,
         fmt="parquet",
     )
-    final = os.path.join(table_path, "_scheme")
-    if os.path.exists(final):
-        # a corrupt remnant from the pre-atomic era (or a healed
-        # migration re-recording): replace under the single-writer
-        # contract — rename onto a non-empty dir would ENOTEMPTY
-        shutil.rmtree(final)
-    os.rename(tmp, final)
+    swap_in(tmp, final)
 
 
 def read_scheme(
@@ -135,9 +129,11 @@ def read_scheme(
     migrate self-heal, which re-derives data + scheme in one atomic
     swap. Returning None for transient read failures is also correct,
     merely paying one unnecessary O(cumulative) migration."""
+    from lakehouse_to_rag_spark.sources.dirswap import recover
     from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
     sdir = os.path.join(table_path, "_scheme")
+    recover(sdir)
     if not os.path.exists(sdir):
         return None
     try:

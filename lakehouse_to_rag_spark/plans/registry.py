@@ -26,6 +26,7 @@ from lakehouse_to_rag_spark.operators import events as ev
 from lakehouse_to_rag_spark.operators import similarity as simi
 from lakehouse_to_rag_spark.operators import text_analysis as ta
 from lakehouse_to_rag_spark.operators import tpch
+from lakehouse_to_rag_spark.operators.gold import gold_transform_fixed_stride
 from lakehouse_to_rag_spark.operators.pipeline import run_medallion
 from lakehouse_to_rag_spark.sources.tables import load_table, tiny_df
 
@@ -167,15 +168,10 @@ FROM (
 @_q("gold_chunks_fixed", _GOLD_FIXED_ORACLE)
 def gold_chunks_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    starts = F.sequence(
-        F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(190)
-    )
-    return docs.select(
-        "doc_id", "text", F.posexplode(starts).alias("chunk_index", "start")
-    ).select(
+    return gold_transform_fixed_stride(docs, "text").select(
         "doc_id",
         F.col("chunk_index").cast("long").alias("chunk_index"),
-        F.expr("substring(text, start, 200)").alias("chunk"),
+        "chunk",
     )
 
 

@@ -41,9 +41,10 @@ import uuid
 # Every remnant suffix a swap writes or has written, by class. New
 # swaps write the first spelling of each class; ``recover`` must keep
 # recognising the others, which a crash under an earlier layout can
-# still have left on disk.
+# still have left on disk (``__tmp_``: the ledger ``_scheme`` record's
+# staging dir from before it was published through ``swap_in``).
 _REMNANTS = {
-    "staging": ("__v_", "__upsert_", "._compact_"),
+    "staging": ("__v_", "__upsert_", "._compact_", "__tmp_"),
     "old": ("__old_", "._old_"),
 }
 

@@ -177,74 +177,6 @@ def write_sorted(
     )
 
 
-def _spread_bits16(col):
-    """Spread the low 16 bits of ``col`` so bit i lands at position 2i
-    (the classic mask-shift interleave, 4 steps) — pure JVM bitwise
-    expressions, whole-stage-codegen'd."""
-    from pyspark.sql import functions as F
-
-    x = col.bitwiseAND(F.lit(0xFFFF))
-    x = x.bitwiseOR(F.shiftleft(x, 8)).bitwiseAND(F.lit(0x00FF00FF))
-    x = x.bitwiseOR(F.shiftleft(x, 4)).bitwiseAND(F.lit(0x0F0F0F0F))
-    x = x.bitwiseOR(F.shiftleft(x, 2)).bitwiseAND(F.lit(0x33333333))
-    x = x.bitwiseOR(F.shiftleft(x, 1)).bitwiseAND(F.lit(0x55555555))
-    return x
-
-
-def zorder_key(col_a, col_b, a_min, a_max, b_min, b_max):
-    """Z-order (Morton) key of two numeric columns: each is scaled to a
-    16-bit rank over its [min, max] range, then the bits interleave.
-    Locality property: rows close in BOTH dimensions get close keys,
-    so range-clustering on the key gives row-group skipping for
-    predicates on EITHER column (a lexicographic sort only skips on
-    its leading column)."""
-    from pyspark.sql import functions as F
-
-    def rank16(c, lo, hi):
-        span = float(hi - lo) or 1.0
-        return F.least(
-            F.lit(65535),
-            F.greatest(
-                F.lit(0),
-                ((c.cast("double") - F.lit(float(lo))) / F.lit(span) * 65535).cast("long"),
-            ),
-        )
-
-    return _spread_bits16(rank16(col_a, a_min, a_max)).bitwiseOR(
-        F.shiftleft(_spread_bits16(rank16(col_b, b_min, b_max)), 1)
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Two-dimensional clustered write: range-partition + sort on the
-    Morton key of (col_a, col_b), so parquet footer min/max stats on
-    BOTH columns are narrow per row group. The one extra cost over
-    ``write_sorted`` is a min/max aggregation to scale the dims (at
-    100 TB: read from table stats instead). Delta/Iceberg OPTIMIZE
-    ZORDER is this exact layout produced by a rewrite job."""
-    from pyspark.sql import functions as F
-
-    lo_a, hi_a, lo_b, hi_b = df.agg(
-        F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-    ).collect()[0]
-    key = zorder_key(F.col(col_a), F.col(col_b), lo_a, hi_a, lo_b, hi_b)
-    (
-        df.withColumn("_zkey", key)
-        .repartitionByRange(n_files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def compact_layer(
     spark: SparkSession,
     path: str,
@@ -323,14 +255,6 @@ def zorder_write(
     column). This is Delta OPTIMIZE ZORDER BY re-expressed as plain
     DataFrame ops: quantile bucket -> bit-interleave ->
     repartitionByRange + sortWithinPartitions.
-
-    Relationship to ``write_zordered`` below: that one scales values
-    linearly over [min, max] (pure JVM bit-spread, zero extra passes —
-    right for uniform-ish columns); THIS one buckets by approximate
-    quantiles, which survives skewed distributions and low-cardinality
-    columns (where min-max scaling parks most rows in a few codes, and
-    collapsed buckets here are spread back across the full bit range —
-    the footer-stats test pins that property on a 15-value column).
 
     Rank-bucketing (not raw bit-slicing) makes the curve robust to
     skewed value distributions; ties share a bucket, which only

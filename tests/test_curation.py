@@ -808,8 +808,14 @@ class TestFingerprintLedgerLayout:
             spark.read.parquet(fp).select("content_fp").distinct().count()
             == 4
         )
-        # the atomic write leaves no staging remnant behind
-        assert not list(pathlib.Path(fp).glob("_scheme__tmp_*"))
+        # the swap leaves no staging or old dir behind, in any spelling
+        from lakehouse_to_rag_spark.sources.dirswap import _REMNANTS
+
+        assert not [
+            p
+            for s in _REMNANTS["staging"] + _REMNANTS["old"]
+            for p in pathlib.Path(fp).glob(f"_scheme{s}*")
+        ]
 
 
 class TestBpeTokenizer:

@@ -152,6 +152,19 @@ def _shards_run(spark, sf_dir, root):
     )
 
 
+def _scheme_setup(spark, sf_dir, root):
+    from lakehouse_to_rag_spark.operators._ledger import write_scheme
+
+    os.makedirs(f"{root}/ledger")
+    write_scheme(spark, f"{root}/ledger", {"n_buckets": 8})
+
+
+def _scheme_run(spark, sf_dir, root):
+    from lakehouse_to_rag_spark.operators._ledger import write_scheme
+
+    write_scheme(spark, f"{root}/ledger", {"n_buckets": 16})
+
+
 CASES = {
     "upsert_by_key": (
         _upsert_setup, _upsert_run, lambda r: [f"{r}/layer"]),
@@ -167,6 +180,8 @@ CASES = {
         lambda r: [f"{r}/bm25/_stats", f"{r}/bm25/_ids"]),
     "write_training_shards": (
         _shards_setup, _shards_run, lambda r: [f"{r}/shards"]),
+    "write_scheme": (
+        _scheme_setup, _scheme_run, lambda r: [f"{r}/ledger/_scheme"]),
 }
 
 # crash step -> (patched call, which call of it raises)
@@ -283,11 +298,9 @@ def test_swap_in_single_rename_when_dst_absent(tmp_path):
 
 def test_directory_renames_only_in_swap_module():
     """Directory swaps go through ``sources.dirswap`` only: an AST scan
-    of the package finds every ``os.rename``/``os.replace`` call and
-    its enclosing function. The one exception is
-    ``_ledger.write_scheme``'s stage-and-rename of the single
-    ``_scheme`` record, a different mechanism (no old dir to displace
-    or restore)."""
+    of the package finds every ``os.rename``/``os.replace`` call (and
+    its enclosing function, to name the offender) outside that
+    module. There must be none."""
     found = []
     for py in sorted(PKG.rglob("*.py")):
         rel = py.relative_to(PKG).as_posix()
@@ -312,4 +325,15 @@ def test_directory_renames_only_in_swap_module():
                     key=lambda s: s.lineno, default=None,
                 )
                 found.append((rel, owner and owner.name))
-    assert found == [("operators/_ledger.py", "write_scheme")]
+    assert found == []
+
+
+def test_recover_sweeps_legacy_scheme_staging(tmp_path):
+    """A ``_scheme__tmp_*`` dir, the ledger record's staging spelling
+    from before it was published through ``swap_in``, is a staging
+    remnant: ``recover`` deletes it and leaves the record alone."""
+    dst = tmp_path / "_scheme"
+    dst.mkdir()
+    (tmp_path / "_scheme__tmp_0123abcd").mkdir()
+    dirswap.recover(str(dst))
+    assert sorted(os.listdir(tmp_path)) == ["_scheme"]

@@ -2008,7 +2008,13 @@ class TestAdmitMediaBatch:
             .select("id").distinct().collect()
         )
         assert got == [0, 2, 10]
-        assert not list(pathlib.Path(table).glob("_scheme__tmp_*"))
+        from lakehouse_to_rag_spark.sources.dirswap import _REMNANTS
+
+        assert not [
+            p
+            for s in _REMNANTS["staging"] + _REMNANTS["old"]
+            for p in pathlib.Path(table).glob(f"_scheme{s}*")
+        ]
 
 
 class TestVideoKeyframeDedup:

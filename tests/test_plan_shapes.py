@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from lakehouse_to_rag_spark.operators import tpch
 from lakehouse_to_rag_spark.operators.analytics import word_frequency
 from lakehouse_to_rag_spark.sources.tables import load_table
+from tools.explain import plan_counts, plan_text
 
 
 def _plan(df) -> str:
@@ -20,9 +21,7 @@ def _plan(df) -> str:
 
 
 def _formatted(df) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
+    return plan_text(df)
 
 
 def _final_plan(df) -> str:
@@ -148,10 +147,9 @@ def test_headline_plan_count_regression(spark, sf_dir):
     """Plan-count ceilings for headline queries: a refactor that adds
     a table re-scan or an exchange passes value tests and hides in
     bench noise locally, but costs hours at 100 TB. Bounds are the
-    current counts (tools/plan_sweep.py) — raise them only with a
+    current counts (tools/explain.py --all) — raise them only with a
     reason in SCALE.md."""
     from lakehouse_to_rag_spark.plans.registry import QUERIES
-    from tools.plan_sweep import plan_counts
 
     bounds = {
         # name: (max_scans, max_exchanges)
@@ -619,3 +617,21 @@ def test_plan_audit_tripwire_rc_semantics(spark, sf_dir, capsys):
     assert classify([]) == (1 if ALLOWLIST else 0)
     assert classify([("x", "Filter transform(...)")]) == 1
     capsys.readouterr()
+
+
+def test_explain_writes_plan_and_counts(spark, sf_dir, tmp_path, capsys):
+    """tools/explain.py on the caller's session: with --out it writes
+    the entry's formatted plan followed by its counts line, and leaves
+    the session usable."""
+    from lakehouse_to_rag_spark.plans.registry import QUERIES
+    from tools.explain import counts_line, run
+
+    run(spark, ["--sf", sf_dir, "--out", str(tmp_path), "silver_docs"])
+    text = (tmp_path / "silver_docs.txt").read_text()
+    assert text.startswith("== Physical Plan ==")
+    want = counts_line(
+        "silver_docs", plan_counts(QUERIES["silver_docs"](spark, sf_dir))
+    )
+    assert text.splitlines()[-1] == want
+    assert capsys.readouterr().out == want + "\n"
+    assert spark.range(3).count() == 3

@@ -238,13 +238,13 @@ def test_write_zordered_skips_on_both_dimensions(spark, sf_dir, tmp_path):
     only skips on its leading column."""
     import pyarrow.parquet as pq
 
-    from lakehouse_to_rag_spark.sources.lakehouse import write_sorted, write_zordered
+    from lakehouse_to_rag_spark.sources.lakehouse import write_sorted, zorder_write
     from lakehouse_to_rag_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     z_path = str(tmp_path / "z")
     lex_path = str(tmp_path / "lex")
-    write_zordered(ev, z_path, "user_id", "value", n_files=16)
+    zorder_write(ev, z_path, ["user_id", "value"], n_files=16)
     write_sorted(ev, lex_path, by_cols=["user_id", "value"], n_files=16)
 
     def bands(path, col):

@@ -48,8 +48,8 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import __spark_entry__ as entry  # noqa: E402
 from lakehouse_to_rag_spark.session import get_spark  # noqa: E402
+from tools.explain import executed_plan, sweep  # noqa: E402
 
 MARKERS = ("transform(", "array_distinct(", "aggregate(")
 
@@ -122,14 +122,13 @@ def audit(sf: str) -> tuple[list[tuple[str, str]], int]:
     spark = get_spark("plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     flagged: list[tuple[str, str]] = []
-    total = len(entry.queries())
-    for name, fn in entry.queries().items():
-        try:
-            plan = fn(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # noqa: BLE001 - report, keep sweeping
-            flagged.append((name, f"PLAN-ERR {str(exc)[:100]}"))
+    total = 0
+    for name, df in sweep(spark, sf):
+        total += 1
+        if isinstance(df, Exception):
+            flagged.append((name, f"PLAN-ERR {str(df)[:100]}"))
             continue
-        for s in flags_for(plan):
+        for s in flags_for(executed_plan(df)):
             flagged.append((name, s))
     spark.stop()
     return flagged, total
