@@ -2088,20 +2088,6 @@ def migrate_media_ledger(
     )
 
 
-def compact_media_ledger(spark, sig_table_path: str) -> int:
-    """Maintenance-window compaction of the banded media signature
-    ledger — the manual form of the per-bucket-depth trigger inside
-    ``admit_media_batch``, for operators who compact on their own
-    schedule (nightly, post-backfill). Same shared
-    ``_compact_index_layout`` swap, ``_scheme`` carried verbatim.
-    Must run with the ingest stream QUIESCED (the single-writer
-    contract that helper documents). Returns the data file count
-    written."""
-    from lakehouse_to_rag_spark.operators._ledger import compact_ledger
-
-    return compact_ledger(spark, sig_table_path, split_col="id")
-
-
 def admit_media_batch(
     spark,
     sig_table_path: str,

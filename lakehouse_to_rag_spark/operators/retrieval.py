@@ -68,6 +68,36 @@ def _query_terms(
     )
 
 
+def _local_query_terms(
+    queries: DataFrame, query_id_col: str, query_text_col: str
+) -> DataFrame:
+    """``_query_terms`` as a driver-local frame (``local_df``): the
+    query frame is collected once with Spark's own
+    ``split(lower(text), " ", -1)`` applied — a projection, which
+    Catalyst folds into a driver-local ``queries``, so the collect then
+    launches no job — and the (query_id, word) pairs are deduplicated
+    in Python; a null text has no terms."""
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    split = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        F.split(F.lower(F.col(query_text_col)), " ", -1).alias("words"),
+    )
+    terms = dict.fromkeys(
+        (qid, w) for qid, words in split.collect() for w in words or ()
+    )
+    return local_df(
+        queries.sparkSession,
+        list(terms),
+        T.StructType(
+            [
+                T.StructField("query_id", split.schema["query_id"].dataType),
+                T.StructField("word", T.StringType()),
+            ]
+        ),
+    )
+
+
 def _score_hits(hits: DataFrame, k: int, k1: float, b: float) -> DataFrame:
     """Shared BM25 scoring tail for the in-memory and persisted-index
     paths — ONE implementation so the two can never drift. ``hits``
@@ -263,31 +293,91 @@ def _parquet_files(dirpath: str) -> list[str] | None:
     return files or None
 
 
-def _read_stats_row(spark, sdir: str):
-    """The one-row ``_stats`` control table, read via parquet footers
-    on the driver when the layer is plain parquet (r14, guide §5: the
-    row is ~40 bytes of control state — a full Spark job to fetch it
-    cost a scheduler round-trip per append/serve). Value-exact: the
-    parquet doubles/longs decode to the same Python values a
-    ``collect()`` returns. Falls back to the Spark read for any other
-    layout (delta, mixed dirs)."""
+def _read_control_rows(spark, sdir: str) -> list[dict]:
+    """Every row of a small index control table (``_stats``,
+    ``_centroids``) as dicts, read via parquet footers on the driver
+    when the layer is plain parquet (r14, guide §5: the rows are a few
+    hundred bytes of control state — a Spark read plus collect cost a
+    schema-inference job and a collect job per append/serve).
+    Value-exact: the parquet doubles/longs/float arrays decode to the
+    same Python values a ``collect()`` returns. Falls back to the Spark
+    read for any other layout (delta, mixed dirs)."""
     files = _parquet_files(sdir)
     if files is not None:
         try:
             import pyarrow.parquet as pq
 
-            for f in files:
-                t = pq.read_table(f)
-                if t.num_rows:
-                    return {
-                        c: t.column(c)[0].as_py() for c in t.column_names
-                    }
+            rows: list[dict] = []
+            for f in sorted(files):
+                rows += pq.read_table(f).to_pylist()
+            return rows
         except Exception:
             pass  # unreadable footer: let Spark produce the real error
     from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
-    row = read_layer(spark, sdir).collect()[0]
-    return row.asDict()
+    return [r.asDict() for r in read_layer(spark, sdir).collect()]
+
+
+def _partition_value(name: str, col: str) -> int | None:
+    """N for a ``{col}=N`` partition dir name, else None."""
+    key, sep, val = name.partition("=")
+    if key != col or not sep or not val.lstrip("-").isdecimal():
+        return None
+    return int(val)
+
+
+def _read_partitions(
+    spark, root: str, col: str, values: list[int]
+) -> DataFrame:
+    """The rows of ``root``'s ``{col}=N`` partitions for N in
+    ``values``, read by path: only those dirs are handed to Spark (with
+    ``basePath``, so ``col`` is still a column). Partition discovery
+    over the root lists every partition dir, with a distributed job
+    past 32 paths, and infers the schema with another job; here the
+    schema comes from a data file's footer, where Spark stores its
+    StructType, and ``col`` is added as the ``int`` discovery infers.
+    Values without a dir contribute no rows. Falls back to the
+    discovery read plus a literal ``isin`` filter whenever the layout
+    is not plain parquet (``_data_names``/``_parquet_files``' rule: a
+    ``_delta_log``, a stray file, a missing dir) or the footer carries
+    no Spark schema."""
+    import os
+
+    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    names = _data_names(root)
+    parts = {_partition_value(n, col): n for n in names or ()}
+    wanted = sorted(set(values))
+    if parts and None not in parts:
+        dirs = [os.path.join(root, parts[v]) for v in wanted if v in parts]
+        files = [
+            _parquet_files(d) for d in dirs or [os.path.join(root, names[0])]
+        ]
+        schema = _spark_footer_schema(files[0][0]) if all(files) else None
+        if schema is not None:
+            schema = schema.add(col, T.IntegerType())
+            if not dirs:
+                return local_df(spark, [], schema)
+            return (
+                spark.read.schema(schema).option("basePath", root).parquet(*dirs)
+            )
+    return read_layer(spark, root).filter(F.col(col).isin(wanted))
+
+
+def _spark_footer_schema(path: str) -> T.StructType | None:
+    """The StructType Spark stores in the footer of each parquet file
+    it writes, or None when the file carries none or is unreadable."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    try:
+        meta = pq.read_schema(path).metadata or {}
+        row_meta = meta[b"org.apache.spark.sql.parquet.row.metadata"]
+        return T.StructType.fromJson(json.loads(row_meta))
+    except (OSError, KeyError, ValueError):
+        return None
 
 
 def _parquet_rowcount(dirpath: str) -> int | None:
@@ -367,7 +457,7 @@ def append_to_bm25_index(
 
     recover(os.path.join(path, "_stats"))
     recover(os.path.join(path, "_ids"))
-    stats = _read_stats_row(spark, os.path.join(path, "_stats"))
+    stats = _read_control_rows(spark, os.path.join(path, "_stats"))[0]
     if "sum_dl" not in stats:
         raise ValueError(
             "append_to_bm25_index: index _stats lacks sum_dl (written "
@@ -613,30 +703,35 @@ def bm25_topk_from_index(
     query_text_col: str = "query",
 ) -> DataFrame:
     """Serve BM25 top-k from a ``write_bm25_index`` layout. The query
-    terms' bucket ids (a driver-side list bounded by the query-term
-    count — the same legitimately tiny collect as the IVF probe list)
-    become a LITERAL ``isin`` partition filter, so Catalyst prunes
-    non-matching ``bucket=N`` directories at file-listing time; the
-    scoring tail is byte-identical to ``bm25_topk`` (shared
-    ``_score_hits``), so persisted == in-memory exactly."""
+    side is evaluated once on the driver: the distinct (query_id, word)
+    terms become a driver-local frame (``_local_query_terms``) and
+    their buckets are Spark's own ``pmod(xxhash64(word), n_buckets)``
+    projected over it, so when ``queries`` is driver-local nothing
+    launches a job before the final plan. Only the matching
+    ``bucket=N`` dirs are then read, by path (``_read_partitions``; a
+    layout that is not plain parquet falls back to the discovery read
+    with a literal ``isin`` filter); the scoring tail is
+    byte-identical to ``bm25_topk`` (shared ``_score_hits``), so
+    persisted == in-memory exactly."""
     import os
-
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
     # one-row control state via parquet footers (r14, guide §5): the
     # Spark read + collect + broadcast of a 40-byte row cost a
     # scheduler round-trip and a BroadcastExchange per serve call;
     # the values are embedded as literals instead (bit-identical
     # doubles — the decoded parquet value IS the stored double)
-    srow = _read_stats_row(spark, os.path.join(path, "_stats"))
+    srow = _read_control_rows(spark, os.path.join(path, "_stats"))[0]
     n_buckets = int(srow["n_buckets"])
-    qterms = _query_terms(queries, query_id_col, query_text_col).withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("word")), F.lit(n_buckets))
-    )
+    qterms = _local_query_terms(queries, query_id_col, query_text_col)
     buckets = sorted(
-        r["bucket"] for r in qterms.select("bucket").distinct().collect()
+        {
+            r[0]
+            for r in qterms.select(
+                F.pmod(F.xxhash64(F.col("word")), F.lit(n_buckets))
+            ).collect()
+        }
     )
-    postings = read_layer(spark, path).filter(F.col("bucket").isin(buckets))
+    postings = _read_partitions(spark, path, "bucket", buckets)
     # df is recomputed from the pruned scan, never trusted from the
     # stored column: appends (append_to_bm25_index) change every
     # term's document frequency but cannot rewrite existing posting
@@ -655,7 +750,7 @@ def bm25_topk_from_index(
     hits = (
         postings.drop("df")
         .withColumn("df", F.count(F.lit(1)).over(wdf))
-        .join(F.broadcast(qterms.drop("bucket")), "word")
+        .join(F.broadcast(qterms), "word")
         .withColumn("n_docs", F.lit(int(srow["n_docs"])))
         .withColumn("avgdl", F.lit(float(srow["avgdl"])))
     )
@@ -737,7 +832,61 @@ def hybrid_retrieval_rrf(
     ``vector_topk=lambda e, q, k: ivf_topk(e, q, k, num_centroids=64,
     nprobe=8)``. At full nprobe IVF degenerates to the exact scan and
     the fused output is identical to the default (equivalence test in
-    tests/test_retrieval.py)."""
+    tests/test_retrieval.py).
+
+    The two query frames (texts and embeddings of ``query_ids``) are
+    collected once into driver-local frames before either backend
+    runs, so a backend's own query-side collects launch no job and the
+    final plan re-reads neither input for them."""
+    queries_txt = docs.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(text_col).alias("query")
+    )
+    qe = embeddings.filter(F.col("vec_id").isin(query_ids))
+    return _fuse_hybrid(
+        docs,
+        embeddings,
+        _to_local(queries_txt),
+        _to_local(qe),
+        k,
+        candidates,
+        c,
+        id_col,
+        text_col,
+        vector_topk,
+        lexical_topk,
+    )
+
+
+def _to_local(df: DataFrame) -> DataFrame:
+    """``df`` collected once into a driver-local frame (``local_df``):
+    the query side of a read path is bounded by the query count, and
+    every later use of it — the backends' term and probe derivation,
+    their broadcasts — then launches no job and re-reads nothing."""
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    return local_df(df.sparkSession, df.collect(), df.schema)
+
+
+def _fuse_hybrid(
+    docs: DataFrame,
+    embeddings: DataFrame,
+    queries_txt: DataFrame,
+    qe: DataFrame,
+    k: int,
+    candidates: int,
+    c: int,
+    id_col: str,
+    text_col: str,
+    vector_topk,
+    lexical_topk,
+) -> DataFrame:
+    """``hybrid_retrieval_rrf``'s fusion over given query frames:
+    (query_id, query) texts and query embeddings. Each backend's
+    top-list (at most queries x (candidates+1) rows) is coalesced to
+    one partition after the backend's per-query rank window, so the
+    self-hit re-rank, the RRF full outer join and its rank window need
+    no exchange. That window already ran one task per query, so the
+    coalesce gives up parallelism only across the queries of one call."""
     from lakehouse_to_rag_spark.operators.similarity import knn_bruteforce
 
     if vector_topk is None:
@@ -745,22 +894,23 @@ def hybrid_retrieval_rrf(
     if lexical_topk is None:
         lexical_topk = bm25_topk
 
-    queries_txt = docs.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(text_col).alias("query")
-    )
     # candidates+1 so the list is still `candidates` deep after the
     # self-hit (always rank 1 for a query drawn from the corpus) drops
-    lex = lexical_topk(
-        docs, queries_txt, k=candidates + 1, id_col=id_col, text_col=text_col
-    ).filter(F.col("query_id") != F.col("doc_id"))
+    lex = (
+        lexical_topk(
+            docs, queries_txt, k=candidates + 1, id_col=id_col,
+            text_col=text_col,
+        )
+        .coalesce(1)
+        .filter(F.col("query_id") != F.col("doc_id"))
+    )
     # re-rank after the self-hit drop so both sides feed 1..candidates
     w = Window.partitionBy("query_id").orderBy(F.asc("rank"))
     lex = (
         lex.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= candidates)
     )
-    qe = embeddings.filter(F.col("vec_id").isin(query_ids))
-    vec = vector_topk(embeddings, qe, candidates).select(
+    vec = vector_topk(embeddings, qe, candidates).coalesce(1).select(
         "query_id",
         F.col("rank").cast("long").alias("rank"),
         F.col("neighbor_id").alias("doc_id"),
@@ -812,7 +962,10 @@ def _mmr_greedy(cv: DataFrame, k: int, lam: float) -> DataFrame:
         ]
     )
 
-    def greedy(_key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # unannotated: under ``from __future__ import annotations`` the
+    # hints are strings, and applyInPandas warns on every call that it
+    # cannot infer an eval type from them
+    def greedy(_key, pdf):
         pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
         m = np.array(list(pdf["nv"]), dtype=np.float64)
         norms = np.linalg.norm(m, axis=1)
@@ -974,13 +1127,24 @@ def rag_read_path(
     6. MMR     — greedy diversity selection of ``k`` (mmr_rerank_scored).
     7. serve   — join document metadata (source, content_length).
 
-    Scale shape: stages 2-3 are the proven broadcast shapes (query
-    terms / query vectors broadcast onto one corpus scan each); stages
-    4-6 touch only queries x candidates rows; stage 7 is a broadcast
-    join of k x queries rows back onto the dim. The store semi-joins
-    are corpus-shuffle-free (broadcast the smaller embedding-id side
-    at 100 TB text / bounded vector store — Catalyst picks this via
-    AQE; at equal sizes it degrades to one co-partitioned shuffle).
+    Scale shape: the query side is collected once, by two single-scan
+    collects — the query texts from ``docs`` and the query vectors
+    from ``embeddings`` — and the store rule (the id has both) is
+    applied on the driver; the backends get driver-local frames
+    (``local_df``), so a served backend derives its terms, buckets and
+    probes without a job. Stages 2-3 are the proven broadcast shapes
+    (query terms / query vectors broadcast onto one corpus or index
+    scan each). Stages 4-6 touch only queries x candidates rows, all
+    on one partition: each backend's top-list is coalesced after its
+    per-query rank window (``_fuse_hybrid``), so the re-rank, the RRF
+    join and the rel window need no exchange. The MMR vector join and
+    the stage-7 metadata join read ``embeddings`` and the non-null
+    ``docs`` directly: the candidates are ids of the store, and an
+    inner join onto each of the store's two sides yields the rows the
+    store itself would, duplicate ids included, without re-deriving
+    its semi-joins per query. The in-memory backends still rank over
+    the store (``rag_store``: shuffle-free semi-joins that broadcast
+    the smaller embedding-id side).
 
     Returns (query_id, mmr_rank, doc_id, rrf_score, rel, mmr_score,
     source, content_length)."""
@@ -989,25 +1153,44 @@ def rag_read_path(
     if not 1 <= k <= kc:
         raise ValueError(f"rag_read_path: need 1 <= k={k} <= kc={kc}")
 
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
     store, emb_store = rag_store(
         docs, embeddings, id_col, text_col, vec_id_col, vec_col
     )
+    # the query side: one single-scan collect per input, the store
+    # rule (the id has both a text and a vector) applied on the driver
+    texts = docs.filter(
+        F.col(text_col).isNotNull() & F.col(id_col).isin(query_ids)
+    ).select(F.col(id_col).alias("query_id"), F.col(text_col).alias("query"))
+    emb = embeddings.select(
+        F.col(vec_id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    )
+    vecs = emb.filter(F.col("vec_id").isin(query_ids))
+    text_rows, vec_rows = texts.collect(), vecs.collect()
+    text_ids, vec_ids = {r[0] for r in text_rows}, {r[0] for r in vec_rows}
+    spark = docs.sparkSession
 
-    # stages 2-4 ARE hybrid_retrieval_rrf over the embedded store —
-    # one implementation, so the self-hit/rank-contiguity discipline
-    # and any future vector-backend swap cannot drift between the
-    # standalone operator and this composition
-    fused = hybrid_retrieval_rrf(
+    # stages 2-4 ARE hybrid_retrieval_rrf's fusion over the embedded
+    # store — one implementation, so the self-hit/rank-contiguity
+    # discipline and any future vector-backend swap cannot drift
+    # between the standalone operator and this composition
+    fused = _fuse_hybrid(
         store,
         emb_store,
-        query_ids,
-        k=kc,
-        candidates=candidates,
-        c=c,
-        id_col=id_col,
-        text_col=text_col,
-        vector_topk=vector_topk,
-        lexical_topk=lexical_topk,
+        local_df(
+            spark, [r for r in text_rows if r[0] in vec_ids], texts.schema
+        ),
+        local_df(
+            spark, [r for r in vec_rows if r[0] in text_ids], vecs.schema
+        ),
+        kc,
+        candidates,
+        c,
+        id_col,
+        text_col,
+        vector_topk,
+        lexical_topk,
     )
     wq = W.partitionBy("query_id")
     mn, mx = F.min("rrf_score").over(wq), F.max("rrf_score").over(wq)
@@ -1024,8 +1207,10 @@ def rag_read_path(
         rel.alias("rel"),
     )
 
-    picked = mmr_rerank_scored(cand, emb_store, k=k, lam=lam)
-    meta = store.select(
+    # candidates come from the store, so inner joins onto each side of
+    # it give the rows the store itself would: no semi-join needed
+    picked = mmr_rerank_scored(cand, emb, k=k, lam=lam)
+    meta = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"),
         "source",
         F.length(text_col).cast("long").alias("content_length"),
@@ -1196,14 +1381,14 @@ def _partition_rowcounts(root: str, col: str) -> dict[int, int] | None:
         return None
     counts: dict[int, int] = {}
     for n in names:
-        key, sep, val = n.partition("=")
-        if key != col or not sep or not val.lstrip("-").isdecimal():
+        val = _partition_value(n, col)
+        if val is None:
             return None
         rows = _parquet_rowcount(os.path.join(root, n))
         if rows is None:
             return None
         if rows:
-            counts[int(val)] = rows
+            counts[val] = rows
     return counts
 
 
@@ -1211,7 +1396,7 @@ def _index_manifest(spark, base_path: str) -> DataFrame:
     """``build_rag_indexes``' manifest, read back from the written
     layouts: ivf per-cluster counts and the bm25 posting total are
     summed from parquet footers, n_docs comes from the ``_stats`` row
-    (``_read_stats_row``). A layout that is not plain parquet falls
+    (``_read_control_rows``). A layout that is not plain parquet falls
     back to the Spark read-back it replaces (groupBy/count over the
     layer). The result is a driver-local frame, so collecting it
     launches no job."""
@@ -1234,7 +1419,7 @@ def _index_manifest(spark, base_path: str) -> DataFrame:
         if bm25 is not None
         else read_layer(spark, bm25_dir).count()
     )
-    n_docs = _read_stats_row(spark, f"{bm25_dir}/_stats")["n_docs"]
+    n_docs = _read_control_rows(spark, f"{bm25_dir}/_stats")[0]["n_docs"]
     rows = [("ivf", c, n) for c, n in sorted(ivf.items())]
     rows += [("bm25", -1, n_post), ("stats", -1, n_docs)]
     return local_df(spark, rows, _MANIFEST_SCHEMA)

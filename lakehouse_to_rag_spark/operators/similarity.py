@@ -453,10 +453,7 @@ def append_to_ivf_index(
                 "pass check_disjoint=False (the default) if duplicate "
                 "absorption at serve time is acceptable."
             )
-    cent_rows = [
-        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in read_layer(spark, f"{path}/_centroids").collect()
-    ]
+    cent_rows = _centroid_rows(spark, path)
     _assert_nonzero_centroids(cent_rows, "append_to_ivf_index")
     assigned = _gemm_assign(new_vectors, cent_rows, id_col, vec_col)
     # count + write in ONE pass via an observed metric (r13
@@ -594,6 +591,93 @@ def compact_ivf_index(
     )
 
 
+def _centroid_rows(spark, path: str) -> list[tuple[int, list[float]]]:
+    """A persisted index's quantizer, ``{path}/_centroids``, as
+    (centroid_id, cvec) rows read from parquet footers on the driver
+    (``retrieval._read_control_rows``, with its Spark fallback)."""
+    from lakehouse_to_rag_spark.operators.retrieval import _read_control_rows
+
+    return [
+        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
+        for r in _read_control_rows(spark, f"{path}/_centroids")
+    ]
+
+
+def _rank_probes(scored: list[tuple], nprobe: int) -> list[tuple]:
+    """``_query_probes``' ranking rule on driver rows: ``scored`` holds
+    (query_id, centroid_id, qcsim, ...) rows; per query_id the first
+    ``nprobe`` rows by qcsim descending — NaN first and null last, as
+    a Spark descending sort places them — then centroid_id ascending."""
+    import math
+
+    def key(r):
+        s = r[2]
+        nan = s is not None and math.isnan(s)
+        return (s is None, not nan, 0.0 if s is None or nan else -s, r[1])
+
+    by_query: dict = {}
+    for r in scored:
+        by_query.setdefault(r[0], []).append(r)
+    return [r for rs in by_query.values() for r in sorted(rs, key=key)[:nprobe]]
+
+
+def _driver_probes(
+    spark,
+    queries: DataFrame,
+    cent_rows: list[tuple[int, list[float]]],
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, list[int]]:
+    """``_query_probes`` evaluated on the driver: the (query_id, qvec,
+    cluster) probe rows as a driver-local frame (``local_df``), and the
+    sorted probed cluster ids. The query frame is collected once; the
+    12dp query-centroid cosines are Spark's own
+    ``round(cosine_similarity(qvec, cvec), 12)`` evaluated as a
+    projection of a driver-local frame of the (query, centroid) pairs,
+    which Catalyst folds into the ``LocalRelation``, so that collect
+    launches no job; the ranking is ``_rank_probes``."""
+    from pyspark.sql import types as T
+
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+    qrows = q.collect()
+    qid = T.StructField("query_id", q.schema["query_id"].dataType)
+    qvec = T.StructField("qvec", q.schema["qvec"].dataType)
+    pairs = [
+        (i, qv, cid, cv)
+        for i, (_, qv) in enumerate(qrows)
+        for cid, cv in cent_rows
+    ]
+    pair_df = local_df(
+        spark,
+        pairs,
+        T.StructType(
+            [
+                T.StructField("i", T.LongType()),
+                qvec,
+                T.StructField("centroid_id", T.LongType()),
+                T.StructField("cvec", T.ArrayType(T.DoubleType())),
+            ]
+        ),
+    )
+    sims = pair_df.select(
+        "i",
+        "centroid_id",
+        F.round(cosine_similarity(F.col("qvec"), F.col("cvec")), 12),
+    ).collect()
+    picked = _rank_probes(
+        [(qrows[i][0], cid, s, i) for i, cid, s in sims], nprobe
+    )
+    probes = local_df(
+        spark,
+        [(qi, qrows[i][1], cid) for qi, cid, _, i in picked],
+        T.StructType([qid, qvec, T.StructField("cluster", T.LongType())]),
+    )
+    return probes, sorted({cid for _, cid, _, _ in picked})
 
 
 def ivf_topk_from_index(
@@ -605,23 +689,23 @@ def ivf_topk_from_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Probe a persisted ``write_ivf_index`` layout. The probed
-    cluster ids (≤ num_centroids ints — the one legitimately tiny
-    driver-side list) become a LITERAL ``isin`` partition filter, so
-    Catalyst prunes non-probed ``cluster=N`` directories at file-listing
-    time — the executed scan's ``numPartitions`` metric equals the
+    """Probe a persisted ``write_ivf_index`` layout. The quantizer is
+    read from ``_centroids``' parquet footers and the probes are ranked
+    on the driver (``_driver_probes`` — the same 12dp cosine and
+    tie rule as ``_query_probes``), so with a driver-local ``queries``
+    frame nothing launches a job before the final plan. Only the
+    probed ``cluster=N`` dirs are read, by path
+    (``retrieval._read_partitions``; a layout that is not plain parquet
+    falls back to the discovery read with a literal ``isin`` filter) —
+    the executed scan's ``numPartitions`` metric equals the
     probed-cluster count, not num_centroids (asserted in
     tests/test_sources.py)."""
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
+    from lakehouse_to_rag_spark.operators.retrieval import _read_partitions
 
-    cent = F.broadcast(read_layer(spark, f"{path}/_centroids"))
-    probes = _query_probes(queries, cent, nprobe, id_col, vec_col)
-    probe_clusters = sorted(
-        r["cluster"] for r in probes.select("cluster").distinct().collect()
+    probes, clusters = _driver_probes(
+        spark, queries, _centroid_rows(spark, path), nprobe, id_col, vec_col
     )
-    assigned = read_layer(spark, path).filter(
-        F.col("cluster").isin(probe_clusters)
-    )
+    assigned = _read_partitions(spark, path, "cluster", clusters)
     return _score_probed(
         assigned, probes, k, id_col, vec_col, dedupe_candidates=True
     )

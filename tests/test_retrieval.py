@@ -1016,3 +1016,246 @@ def test_retrieval_metrics_rejects_duplicate_qrels(spark):
     out = retrieval_metrics(runs, qrels, k=10)  # plan builds fine
     with pytest.raises(SparkRuntimeException, match="duplicate judgments"):
         out.collect()
+
+
+@pytest.fixture(scope="module")
+def served_indexes(spark, sf_dir, tmp_path_factory):
+    """BM25 (64 buckets) and IVF (16 centroids) indexes over the
+    embedded store, as rag_read_path_served builds them."""
+    from lakehouse_to_rag_spark.operators.retrieval import (
+        rag_store,
+        write_bm25_index,
+    )
+    from lakehouse_to_rag_spark.operators.similarity import write_ivf_index
+    from lakehouse_to_rag_spark.sources.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    e = load_table(spark, sf_dir, "embeddings")
+    store, emb_store = rag_store(d, e)
+    base = tmp_path_factory.mktemp("served")
+    write_bm25_index(store, str(base / "bm25"))
+    write_ivf_index(emb_store, str(base / "ivf"), num_centroids=16)
+    return d, e, emb_store, str(base / "bm25"), str(base / "ivf")
+
+
+def _local_text(spark, rows):
+    """(query_id, query) rows as a driver-local frame."""
+    from pyspark.sql import types as T
+
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    return local_df(
+        spark, rows, T.StructType.fromDDL("query_id long, query string")
+    )
+
+
+def _serve(spark, d, e, bm25, ivf, query_ids, nprobe=4):
+    from lakehouse_to_rag_spark.operators.retrieval import rag_read_path
+    from lakehouse_to_rag_spark.operators.similarity import (
+        ivf_topk_from_index,
+    )
+
+    return rag_read_path(
+        d, e, query_ids,
+        lexical_topk=lambda docs, q, k, id_col, text_col:
+            bm25_topk_from_index(spark, bm25, q, k=k),
+        vector_topk=lambda emb, q, k:
+            ivf_topk_from_index(spark, ivf, q, k=k, nprobe=nprobe),
+    )
+
+
+class TestServePath:
+    """The served read path: the query side is evaluated on the driver
+    and index partitions are read by path, so a served query costs a
+    fixed, small number of Spark jobs."""
+
+    def test_backends_launch_no_job_before_collect(
+        self, spark, served_indexes
+    ):
+        """Given driver-local queries, neither index backend launches a
+        job while its DataFrame is built."""
+        from lakehouse_to_rag_spark.operators.similarity import (
+            ivf_topk_from_index,
+        )
+        from lakehouse_to_rag_spark.sources.tables import local_df
+
+        _, _, emb_store, bm25, ivf = served_indexes
+        q = _local_text(spark, [(0, "the data pipeline"), (1, "Fast  SCAN")])
+        res, launched, _ = _jobs_between_markers(
+            spark, lambda: bm25_topk_from_index(spark, bm25, q, k=5)
+        )
+        assert launched == set()
+        assert res.collect()
+        qv = local_df(
+            spark,
+            [tuple(r) for r in emb_store.filter("vec_id < 3").collect()],
+            emb_store.schema,
+        )
+        res, launched, _ = _jobs_between_markers(
+            spark,
+            lambda: ivf_topk_from_index(spark, ivf, qv, k=5, nprobe=4),
+        )
+        assert launched == set()
+        assert res.collect()
+
+    def test_served_read_path_job_budget(self, spark, served_indexes):
+        """One served query — both query collects, the plan and its
+        collect — stays within 16 Spark jobs."""
+        d, e, _, bm25, ivf = served_indexes
+        rows, launched, _ = _jobs_between_markers(
+            spark, lambda: _serve(spark, d, e, bm25, ivf, [0]).collect()
+        )
+        assert rows
+        assert len(launched) <= 16
+
+    def test_driver_probes_match_query_probes(self, spark):
+        """_driver_probes ranks as _query_probes does: an exact 12dp tie
+        between two identical centroids goes to the smaller id, and a
+        zero-norm query (null cosine to every centroid) probes the
+        smallest ids."""
+        from lakehouse_to_rag_spark.operators.similarity import (
+            _driver_probes,
+            _query_probes,
+        )
+
+        cent_rows = [
+            (0, [0.0, 1.0, 0.0]),
+            (1, [1.0, 1.0, 0.0]),
+            (2, [1.0, 0.0, 0.5]),
+            (3, [1.0, 1.0, 0.0]),  # exact tie with centroid 1
+            (4, [-1.0, 0.0, 0.0]),
+        ]
+        queries = spark.createDataFrame(
+            [(10, [2.0, 2.0, 0.0]), (11, [0.0, 0.0, 0.0]),
+             (12, [0.3, 0.7, 0.1])],
+            "vec_id long, embedding array<float>",
+        )
+        cent = spark.createDataFrame(
+            cent_rows, "centroid_id long, cvec array<float>"
+        )
+        for nprobe in (1, 2, 3):
+            want = sorted(
+                (r["query_id"], r["cluster"])
+                for r in _query_probes(
+                    queries, cent, nprobe, "vec_id", "embedding"
+                ).collect()
+            )
+            probes, clusters = _driver_probes(
+                spark, queries, cent_rows, nprobe, "vec_id", "embedding"
+            )
+            got = sorted(
+                (r["query_id"], r["cluster"]) for r in probes.collect()
+            )
+            assert got == want
+            assert clusters == sorted({c for _, c in want})
+            if nprobe == 1:  # the tie goes to the smaller id
+                assert (10, 1) in got and (10, 3) not in got
+
+    def test_local_query_terms_match_query_terms(self, spark):
+        """The driver term derivation equals _query_terms on repeated
+        spaces, the empty string, a null text and mixed or non-ASCII
+        case."""
+        from lakehouse_to_rag_spark.operators.retrieval import (
+            _local_query_terms,
+            _query_terms,
+        )
+
+        rows = [
+            (0, "Data  PIPELINE data "),
+            (1, ""),
+            (2, None),
+            (3, "ÄÖÜ Straße İstanbul ΣΊΣΥΦΟΣ"),
+            (4, "MiXeD mixed"),
+        ]
+        q = _queries(spark, rows)
+        want = sorted(map(tuple, _query_terms(q, "query_id", "query").collect()))
+        got = sorted(
+            map(tuple, _local_query_terms(q, "query_id", "query").collect())
+        )
+        assert got == want and (1, "") in got
+
+    @pytest.mark.parametrize("plant", ["delta_log", "stray_file"])
+    def test_partition_reads_fall_back_to_discovery(
+        self, spark, sf_dir, tmp_path, monkeypatch, plant
+    ):
+        """A layout the footer path does not recognise — an empty
+        ``_delta_log`` at the root, or a part file without the
+        .parquet suffix in every partition dir — takes the
+        read_layer fallback, and both backends return the same rows as
+        on the plain layout. The direct read's schema equals the
+        discovery read's."""
+        import pathlib
+
+        import pyarrow.parquet as pq
+
+        from lakehouse_to_rag_spark.operators.retrieval import (
+            _read_partitions,
+        )
+        from lakehouse_to_rag_spark.operators.similarity import (
+            ivf_topk_from_index,
+            write_ivf_index,
+        )
+        from lakehouse_to_rag_spark.sources import lakehouse
+        from lakehouse_to_rag_spark.sources.tables import load_table
+
+        d = load_table(spark, sf_dir, "documents")
+        e = load_table(spark, sf_dir, "embeddings")
+        bm25, ivf = str(tmp_path / "bm25"), str(tmp_path / "ivf")
+        write_bm25_index(d, bm25, n_buckets=16)
+        write_ivf_index(e, ivf, num_centroids=8)
+        q = _local_text(spark, [(0, "the data pipeline")])
+        qv = e.filter("vec_id < 3")
+
+        def serve():
+            return (
+                sorted(map(tuple, bm25_topk_from_index(spark, bm25, q, k=5).collect())),
+                sorted(
+                    map(tuple, ivf_topk_from_index(spark, ivf, qv, k=5, nprobe=3).collect())
+                ),
+            )
+
+        plain = serve()
+        assert plain[0] and plain[1]
+        for root, col in ((bm25, "bucket"), (ivf, "cluster")):
+            direct = _read_partitions(spark, root, col, list(range(16)))
+            assert direct.schema == lakehouse.read_layer(spark, root).schema
+
+        roots = []
+        real_read_layer = lakehouse.read_layer
+
+        def spy(spark_, path, *a, **kw):
+            roots.append(path)
+            return real_read_layer(spark_, path, *a, **kw)
+
+        monkeypatch.setattr(lakehouse, "read_layer", spy)
+        for root in (pathlib.Path(bm25), pathlib.Path(ivf)):
+            if plant == "delta_log":
+                (root / "_delta_log").mkdir()
+                continue
+            for pdir in (p for p in root.iterdir() if "=" in p.name):
+                part = next(pdir.glob("*.parquet"))
+                empty = pq.read_table(part).slice(0, 0)
+                pq.write_table(empty, str(pdir / "part-stray"))
+        assert serve() == plain
+        assert bm25 in roots and ivf in roots
+
+    def test_query_without_bucket_dirs_is_empty(self, spark, tmp_path):
+        """A query whose buckets hold no postings reads no dir and
+        returns no rows."""
+        docs = spark.createDataFrame(
+            [(0, "alpha"), (1, "alpha beta")], "doc_id long, text string"
+        )
+        path = str(tmp_path / "bm25")
+        write_bm25_index(docs, path, n_buckets=64)
+        present = {
+            int(p.name.split("=")[1])
+            for p in tmp_path.joinpath("bm25").iterdir()
+            if p.name.startswith("bucket=")
+        }
+        word = next(
+            w for w in (f"w{i}" for i in range(1000))
+            if spark.sql(f"SELECT pmod(xxhash64('{w}'), 64)").first()[0]
+            not in present
+        )
+        q = _local_text(spark, [(0, word)])
+        assert bm25_topk_from_index(spark, path, q, k=5).collect() == []
