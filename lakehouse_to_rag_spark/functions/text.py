@@ -71,13 +71,6 @@ def normalize_text(col: str | Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(stripped), _WS_RE, " "))
 
 
-def word_tokens(col: str | Column) -> Column:
-    """Whitespace tokenization (reference duckdb_queries.py:103
-    STRING_SPLIT(content, ' ') — keeps empty tokens; -1 limit matches)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, " ", -1)
-
-
 # A small multilingual stopword inventory for the language-ID heuristic
 # (public-knowledge closed-class words; the n-gram/stopword approach is
 # the standard cheap langid baseline).

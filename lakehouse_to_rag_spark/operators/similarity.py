@@ -227,7 +227,7 @@ def ivf_assign(
     seeds = cent_src.collect()
     cent_rows = [(int(r[0]), [float(x) for x in r[1]]) for r in seeds]
     _assert_nonzero_centroids(cent_rows, "ivf_assign")
-    cent = F.broadcast(local_df(corpus.sparkSession, seeds, cent_src.schema))
+    cent = local_df(corpus.sparkSession, seeds, cent_src.schema)
     assigned = _gemm_assign(corpus, cent_rows, id_col, vec_col)
     return cent, assigned
 
@@ -247,7 +247,7 @@ def _query_probes(
         F.desc("qcsim"), F.asc("centroid_id")
     )
     return (
-        q.crossJoin(cent)
+        q.crossJoin(F.broadcast(cent))
         .select(
             "query_id",
             "qvec",
@@ -363,15 +363,12 @@ def write_ivf_index(
     from lakehouse_to_rag_spark.sources.lakehouse import write_layer
 
     if trained:
-        cent_df = kmeans_centroids(
+        cent = kmeans_centroids(
             corpus, num_centroids, iterations, id_col, vec_col
         )
         cent_rows = [
-            (int(r[0]), [float(x) for x in r[1]]) for r in cent_df.collect()
+            (int(r[0]), [float(x) for x in r[1]]) for r in cent.collect()
         ]
-        cent = F.broadcast(
-            cent_df.select("centroid_id", F.col("cvec"))
-        )
         assigned = _gemm_assign(corpus, cent_rows, id_col, vec_col)
     else:
         if not _is_checkpoint(corpus):

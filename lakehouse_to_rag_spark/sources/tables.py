@@ -140,13 +140,6 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, tables: list[str] | None = None
-) -> dict[str, DataFrame]:
-    """Catalog convenience: every table as a dict of lazy scans."""
-    return {t: load_table(spark, sf_dir, t) for t in tables or TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
     """Register each table as a temp view for the SQL API
     (parity with the reference's duckdb ``con.register``,

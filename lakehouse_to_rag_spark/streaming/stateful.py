@@ -49,10 +49,6 @@ _OUTPUT_SCHEMA = StructType(
 )
 
 
-def _us(ts: pd.Timestamp) -> int:
-    return int(ts.value // 1000)
-
-
 def sessionize_stateful(
     events: DataFrame,
     gap_seconds: int = SESSION_GAP_SECONDS,

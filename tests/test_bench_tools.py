@@ -337,3 +337,25 @@ def test_rmw_migrates_flat_record_instead_of_discarding(tmp_path):
     assert json.loads(rec.read_text()) == {
         "by_sf": {"0.1": {"q1": 9.0}, "0.01": {"q1": 0.2}}
     }
+
+
+def test_every_tool_is_reached():
+    """Each ``tools/*.py`` script is run by a test or by the verify
+    workflow: its module path (``tools.NAME``) or file path
+    (``tools/NAME.py``) appears in some ``tests/*.py`` file or in the
+    verify SKILL.md. A script named nowhere is deleted, and the
+    SCALE.md/COVERAGE.md rows it sourced name the last commit that
+    had it."""
+    import re
+
+    texts = [p.read_text() for p in sorted((REPO / "tests").glob("*.py"))]
+    texts.append((REPO / ".claude/skills/verify/SKILL.md").read_text())
+    unreached = [
+        py.name
+        for py in sorted((REPO / "tools").glob("*.py"))
+        if py.stem != "__init__"
+        and not any(
+            re.search(rf"\btools[./]{re.escape(py.stem)}\b", t) for t in texts
+        )
+    ]
+    assert unreached == []

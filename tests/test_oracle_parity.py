@@ -10,16 +10,11 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR, SF_DIR_001, SF_DIR_01
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from tools.oracle_sweep import duck_views, hostile_columns
 
 ORACLES = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
@@ -27,11 +22,7 @@ QUERIES = entrymod.queries()
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -65,14 +56,7 @@ def test_oracle_projection_types(name, duck):
     nested cells break ``sort_values`` (the r6 ``embed_hashed_tf``
     ERR). This turns that whole divergence class into a local
     pre-gate failure."""
-    desc = duck.execute("DESCRIBE " + ORACLES[name]).fetchall()
-    bad = [
-        (col, typ)
-        for col, typ, *_ in desc
-        if "HUGEINT" in typ.upper()
-        or "[]" in typ
-        or typ.upper().startswith(("STRUCT", "MAP", "LIST", "UNION"))
-    ]
+    bad = hostile_columns(duck.execute("DESCRIBE " + ORACLES[name]).fetchall())
     assert not bad, (
         f"{name}: oracle projects driver-hostile types {bad} — CAST "
         "HUGEINT to BIGINT / flatten nested columns to scalar rows"
@@ -82,8 +66,8 @@ def test_oracle_projection_types(name, duck):
 def test_projection_guard_catches_reintroduced_hostile_types(duck):
     """Negative control for the gate-contract guard (the r6 done
     criterion): a deliberately HUGEINT projection and a deliberately
-    nested one must BOTH be flagged by the exact check the
-    projection-types test and the sweep pre-flight run."""
+    nested one must BOTH be flagged by ``hostile_columns``, the check
+    the projection-types test and the sweep pre-flight both run."""
     hostile_cases = {
         # SUM over BIGINT is HUGEINT in DuckDB — the r6 image red row
         "hugeint": "SELECT doc_id, SUM(doc_id) AS s FROM documents GROUP BY doc_id",
@@ -92,14 +76,7 @@ def test_projection_guard_catches_reintroduced_hostile_types(duck):
     }
     for label, sql in hostile_cases.items():
         desc = duck.execute("DESCRIBE " + sql).fetchall()
-        bad = [
-            (c, t)
-            for c, t, *_ in desc
-            if "HUGEINT" in t.upper()
-            or "[]" in t
-            or t.upper().startswith(("STRUCT", "MAP", "LIST", "UNION"))
-        ]
-        assert bad, f"{label}: guard failed to flag {desc}"
+        assert hostile_columns(desc), f"{label}: guard failed to flag {desc}"
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

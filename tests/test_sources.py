@@ -4,6 +4,7 @@
 import os
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.operators.analytics import run_custom_query
@@ -458,6 +459,41 @@ def test_write_ivf_index_reuses_callers_checkpoint(spark, tmp_path):
     assert set(jsc.getPersistentRDDs().keys()) <= before
     assert calls.value == n
     assert spark.read.parquet(path).count() == n
+
+
+@pytest.mark.parametrize("trained", [False, True])
+def test_write_ivf_index_centroids_carry_no_join_hint(
+    spark, tmp_path, monkeypatch, trained
+):
+    """The _centroids frame is only written, never joined, so it
+    carries no broadcast hint: a hint outside a join is dropped by the
+    optimizer with a HintErrorLogger warning on every build. The
+    broadcast belongs to the probe crossJoin that reads the
+    centroids."""
+    from lakehouse_to_rag_spark.operators.similarity import write_ivf_index
+    from lakehouse_to_rag_spark.sources import lakehouse
+
+    plans = []
+
+    def recording_write(df, path, *args, **kwargs):
+        if path.endswith("/_centroids"):
+            plans.append(df._jdf.queryExecution().analyzed().toString())
+        return write_layer(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(lakehouse, "write_layer", recording_write)
+    corpus = spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            (F.col("id") % 5 + 1).cast("double"),
+            (F.col("id") % 3).cast("double"),
+        ).alias("embedding"),
+    )
+    write_ivf_index(
+        corpus, str(tmp_path / "ivf"), num_centroids=4, trained=trained
+    )
+
+    assert len(plans) == 1
+    assert "ResolvedHint" not in plans[0], plans[0]
 
 
 def test_delta_probe_memoized_per_context(monkeypatch):

@@ -14,6 +14,10 @@ Usage: python tools/oracle_sweep.py [sf_dir] [entry ...]
 (default sf0.1; optional entry names restrict the sweep — the r13
 optimization round's per-change re-proof loop)
 Prints one line per oracle-backed entry; exits nonzero on mismatch.
+
+tests/test_oracle_parity.py runs the same DuckDB setup
+(``duck_views``) and type pre-flight (``hostile_columns``) but
+compares at full precision instead of through ``_canon``.
 """
 
 from __future__ import annotations
@@ -28,9 +32,34 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
 from lakehouse_to_rag_spark.session import get_spark  # noqa: E402
+from lakehouse_to_rag_spark.sources.tables import TABLES  # noqa: E402
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per dataset table over
+    ``sf_dir``'s parquet — the oracle side of every parity compare."""
+    con = duckdb.connect()
+    # spill OUTSIDE the repo: the heavier oracles (image-pHash DP
+    # layers) spill tens of GB; an un-set temp_directory lands that
+    # in ./.tmp and a killed sweep leaves multi-GB debris behind
+    con.execute("SET temp_directory='/tmp/duckspill'")
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def hostile_columns(describe_rows) -> list[tuple[str, str]]:
+    """The (column, type) pairs of a DuckDB ``DESCRIBE`` result that
+    the driver's pandas fetch cannot carry: HUGEINT reaches pandas as
+    float64 (truncating 63-bit values) and nested cells break
+    ``sort_values``. Checked before an oracle is executed."""
+    return [
+        (c, t)
+        for c, t, *_ in describe_rows
+        if "HUGEINT" in t.upper()
+        or "[]" in t
+        or t.upper().startswith(("STRUCT", "MAP", "LIST", "UNION"))
+    ]
 
 
 def _canon(df):
@@ -76,13 +105,7 @@ def main() -> None:
         if unknown:
             sys.exit(f"unknown entries: {sorted(unknown)}")
         qs = {k: v for k, v in qs.items() if k in only}
-    con = duckdb.connect()
-    # spill OUTSIDE the repo: the heavier oracles (image-pHash DP
-    # layers) spill tens of GB; an un-set temp_directory lands that
-    # in ./.tmp and a killed sweep leaves multi-GB debris behind
-    con.execute("SET temp_directory='/tmp/duckspill'")
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = duck_views(sf)
     fails = []
     for name in qs:
         if name not in osql:
@@ -90,14 +113,9 @@ def main() -> None:
         t0 = time.time()
         try:
             # pre-flight the gate contract before paying for execution
-            desc = con.execute("DESCRIBE " + osql[name]).fetchall()
-            hostile = [
-                (c, t)
-                for c, t, *_ in desc
-                if "HUGEINT" in t.upper()
-                or "[]" in t
-                or t.upper().startswith(("STRUCT", "MAP", "LIST", "UNION"))
-            ]
+            hostile = hostile_columns(
+                con.execute("DESCRIBE " + osql[name]).fetchall()
+            )
             if hostile:
                 raise TypeError(f"driver-hostile oracle types {hostile}")
             spdf = qs[name](spark, sf).toPandas()
