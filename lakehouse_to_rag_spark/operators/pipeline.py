@@ -105,8 +105,9 @@ def run_medallion_incremental(
     rides the one materialization the batch already paid (the lazy
     checkpoint's first action IS the count job).
     """
-    from pyspark.errors import AnalysisException
+    import os
 
+    from lakehouse_to_rag_spark.operators.retrieval import _data_names
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         upsert_by_key,
@@ -120,10 +121,18 @@ def run_medallion_incremental(
             id_cols=("url", "source", "title", "doc_id", "lang"),
             processed_at=ts,
         )
-        try:
-            seen = read_layer(spark, paths["bronze"]).select("url").distinct()
-        except AnalysisException:
-            seen = None  # first batch: no bronze layer yet
+        # first batch: no bronze dir, or one that lists no data entries
+        # (``_data_names``' rule; it returns None for a delta layer,
+        # which does hold data). Reading a missing layer fails analysis,
+        # and Spark's query listeners log that failure at ERROR.
+        first = (
+            not os.path.isdir(paths["bronze"])
+            or _data_names(paths["bronze"]) == []
+        )
+        seen = (
+            None if first
+            else read_layer(spark, paths["bronze"]).select("url").distinct()
+        )
         silver_b = silver_transform(
             bronze_b,
             key_col="url",
@@ -141,7 +150,6 @@ def run_medallion_incremental(
         # the same one job the eager checkpoint ran)
         fresh = fresh.localCheckpoint(eager=False)
         n_admitted = fresh.count()
-        import os
 
         # the skip only applies to layers that already exist — a
         # zero-admission FIRST batch still creates them (whatever the

@@ -757,6 +757,19 @@ def bm25_topk_from_index(
     return _score_hits(hits, k, k1, b)
 
 
+def _rrf_score(c: int):
+    """The RRF score of a (rank_a, rank_b) row, either rank null when
+    the document is missing from that list: the one definition behind
+    ``rrf_fuse`` and the driver fusion (``_fuse_rows``)."""
+
+    def term(rank: str):
+        return F.when(
+            F.col(rank).isNotNull(), F.lit(1.0) / (F.lit(c) + F.col(rank))
+        ).otherwise(F.lit(0.0))
+
+    return F.round(term("rank_a") + term("rank_b"), 6)
+
+
 def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
@@ -773,20 +786,11 @@ def rrf_fuse(
     a = ranked_a.select("query_id", "doc_id", F.col("rank").alias("rank_a"))
     b = ranked_b.select("query_id", "doc_id", F.col("rank").alias("rank_b"))
     union = a.join(b, ["query_id", "doc_id"], "full_outer")
-    score = F.round(
-        F.when(
-            F.col("rank_a").isNotNull(), F.lit(1.0) / (F.lit(c) + F.col("rank_a"))
-        ).otherwise(F.lit(0.0))
-        + F.when(
-            F.col("rank_b").isNotNull(), F.lit(1.0) / (F.lit(c) + F.col("rank_b"))
-        ).otherwise(F.lit(0.0)),
-        6,
-    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("rrf_score"), F.asc("doc_id")
     )
     return (
-        union.select("query_id", "doc_id", score.alias("rrf_score"))
+        union.select("query_id", "doc_id", _rrf_score(c).alias("rrf_score"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
@@ -834,19 +838,28 @@ def hybrid_retrieval_rrf(
     the fused output is identical to the default (equivalence test in
     tests/test_retrieval.py).
 
-    The two query frames (texts and embeddings of ``query_ids``) are
-    collected once into driver-local frames before either backend
-    runs, so a backend's own query-side collects launch no job and the
-    final plan re-reads neither input for them."""
+    The backends rank in Spark: the two query frames (texts and
+    embeddings of ``query_ids``) are collected concurrently into
+    driver-local frames, and the two backend top-lists are built and
+    collected concurrently (``_fuse_hybrid``). The fusion is bounded
+    by queries x candidates rows and runs on the driver, so the result
+    is a driver-local frame (``local_df``) that launches no job when
+    collected."""
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
     queries_txt = docs.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(text_col).alias("query")
     )
     qe = embeddings.filter(F.col("vec_id").isin(query_ids))
-    return _fuse_hybrid(
+    spark = docs.sparkSession
+    txt_rows, qe_rows = _concurrently(
+        spark, queries_txt.collect, qe.collect
+    )
+    rows, schema = _fuse_hybrid(
         docs,
         embeddings,
-        _to_local(queries_txt),
-        _to_local(qe),
+        local_df(spark, txt_rows, queries_txt.schema),
+        local_df(spark, qe_rows, qe.schema),
         k,
         candidates,
         c,
@@ -855,16 +868,97 @@ def hybrid_retrieval_rrf(
         vector_topk,
         lexical_topk,
     )
+    return local_df(spark, rows, schema)
 
 
-def _to_local(df: DataFrame) -> DataFrame:
-    """``df`` collected once into a driver-local frame (``local_df``):
-    the query side of a read path is bounded by the query count, and
-    every later use of it — the backends' term and probe derivation,
-    their broadcasts — then launches no job and re-reads nothing."""
+def _concurrently(spark, *fns) -> list:
+    """Each of ``fns`` called in its own pool thread (``pool_task``
+    keeps the caller's job group); their results in order. The
+    read path's collects are small and latency-bound, so overlapping
+    them overlaps their scheduling and planning, not just their
+    tasks."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from lakehouse_to_rag_spark.session import pool_task
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(pool_task(spark, fn)) for fn in fns]
+        return [f.result() for f in futures]
+
+
+def _local_eval(spark, rows: list, schema: T.StructType, *cols) -> list:
+    """``cols`` evaluated over driver ``rows``: a projection of a
+    driver-local frame, which Catalyst folds into the
+    ``LocalRelation`` (the ``similarity._driver_probes`` precedent),
+    so Spark's own expression semantics hold and no job launches."""
     from lakehouse_to_rag_spark.sources.tables import local_df
 
-    return local_df(df.sparkSession, df.collect(), df.schema)
+    if not rows:
+        return []
+    return local_df(spark, rows, schema).select(*cols).collect()
+
+
+def _fuse_rows(
+    spark,
+    lex: list,
+    vec: list,
+    k: int,
+    candidates: int,
+    c: int,
+    id_type: T.DataType,
+) -> list[tuple]:
+    """``_fuse_hybrid``'s fusion on collected (query_id, rank, doc_id)
+    top-lists: the lexical self-hit drop and re-rank to
+    1..``candidates``, then ``rrf_fuse`` — its full outer join, with
+    the join's multiplicity for duplicate (query_id, doc_id) keys; the
+    score is ``_rrf_score`` evaluated by ``_local_eval``; the rank is
+    its window's order (score desc, doc_id asc). Ids are non-null:
+    the backends drop null ids in their joins and self-hit filters.
+    Returns (query_id, rank, doc_id, rrf_score) rows."""
+    by_query: dict = {}
+    for q, r, d in lex:
+        if q != d:
+            by_query.setdefault(q, []).append((r, d))
+    lex = [
+        (q, i, d)
+        for q, hits in by_query.items()
+        for i, (_, d) in enumerate(sorted(hits), 1)
+        if i <= candidates
+    ]
+    vec_ranks: dict = {}
+    for q, r, d in vec:
+        vec_ranks.setdefault((q, d), []).append(r)
+    lex_keys = {(q, d) for q, _, d in lex}
+    union = [
+        (q, d, r, rb) for q, r, d in lex for rb in vec_ranks.get((q, d), [None])
+    ]
+    union += [(q, d, None, r) for q, r, d in vec if (q, d) not in lex_keys]
+    scored = _local_eval(
+        spark,
+        union,
+        T.StructType(
+            [
+                T.StructField("query_id", id_type),
+                T.StructField("doc_id", id_type),
+                T.StructField("rank_a", T.LongType()),
+                T.StructField("rank_b", T.LongType()),
+            ]
+        ),
+        "query_id",
+        "doc_id",
+        _rrf_score(c),
+    )
+    by_query = {}
+    for q, d, s in scored:
+        by_query.setdefault(q, []).append((d, s))
+    return [
+        (q, i, d, s)
+        for q, hits in by_query.items()
+        for i, (d, s) in enumerate(
+            sorted(hits, key=lambda h: (-h[1], h[0])), 1
+        )
+        if i <= k
+    ]
 
 
 def _fuse_hybrid(
@@ -879,14 +973,15 @@ def _fuse_hybrid(
     text_col: str,
     vector_topk,
     lexical_topk,
-) -> DataFrame:
+) -> tuple[list[tuple], T.StructType]:
     """``hybrid_retrieval_rrf``'s fusion over given query frames:
-    (query_id, query) texts and query embeddings. Each backend's
-    top-list (at most queries x (candidates+1) rows) is coalesced to
-    one partition after the backend's per-query rank window, so the
-    self-hit re-rank, the RRF full outer join and its rank window need
-    no exchange. That window already ran one task per query, so the
-    coalesce gives up parallelism only across the queries of one call."""
+    (query_id, query) texts and query embeddings. Spark computes the
+    two backend top-lists, each built and collected in its own pool
+    thread (``_concurrently``) so their jobs overlap; the fusion of
+    the at most queries x (candidates+1) rows they return runs on the
+    driver (``_fuse_rows``). Returns the fused (query_id, rank,
+    doc_id, rrf_score) rows and their schema (the id columns take the
+    lexical top-list's type)."""
     from lakehouse_to_rag_spark.operators.similarity import knn_bruteforce
 
     if vector_topk is None:
@@ -896,55 +991,46 @@ def _fuse_hybrid(
 
     # candidates+1 so the list is still `candidates` deep after the
     # self-hit (always rank 1 for a query drawn from the corpus) drops
-    lex = (
-        lexical_topk(
+    def lexical():
+        df = lexical_topk(
             docs, queries_txt, k=candidates + 1, id_col=id_col,
             text_col=text_col,
-        )
-        .coalesce(1)
-        .filter(F.col("query_id") != F.col("doc_id"))
+        ).select("query_id", "rank", "doc_id")
+        return df.schema["doc_id"].dataType, df.collect()
+
+    def vector():
+        return vector_topk(embeddings, qe, candidates).select(
+            "query_id", "rank", "neighbor_id"
+        ).collect()
+
+    (id_type, lex), vec = _concurrently(docs.sparkSession, lexical, vector)
+    rows = _fuse_rows(docs.sparkSession, lex, vec, k, candidates, c, id_type)
+    return rows, T.StructType(
+        [
+            T.StructField("query_id", id_type),
+            T.StructField("rank", T.LongType()),
+            T.StructField("doc_id", id_type),
+            T.StructField("rrf_score", T.DoubleType()),
+        ]
     )
-    # re-rank after the self-hit drop so both sides feed 1..candidates
-    w = Window.partitionBy("query_id").orderBy(F.asc("rank"))
-    lex = (
-        lex.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= candidates)
-    )
-    vec = vector_topk(embeddings, qe, candidates).coalesce(1).select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.col("neighbor_id").alias("doc_id"),
-    )
-    return rrf_fuse(lex, vec, k=k, c=c)
 
 
-def _mmr_greedy(cv: DataFrame, k: int, lam: float) -> DataFrame:
-    """Shared greedy-MMR core over ``cv`` = (query_id, neighbor_id,
-    rel, nv): per query, ``k`` selection steps maximizing
-    ``lam * rel - (1 - lam) * max_sim(d, selected)`` over the
-    candidate set. ONE implementation serves both the cosine-relevance
-    form (``mmr_rerank``) and the pre-scored form
-    (``mmr_rerank_scored``), so the two can never drift.
-
-    Scale shape: the greedy stage shuffles only queries x n_candidates
-    rows and runs per-query on the bounded candidate set
-    (Arrow-grouped, O(k * n) per query) — nothing corpus-sized.
+def _mmr_select(pdf, k: int, lam: float):
+    """Greedy MMR for ONE query: ``pdf`` holds the query's candidate
+    rows (query_id, neighbor_id, rel, nv); ``k`` selection steps
+    maximize ``lam * rel - (1 - lam) * max_sim(d, selected)`` over
+    them. ONE implementation: ``_mmr_greedy`` applies it per query
+    group in Spark, ``rag_read_path`` calls it on the driver.
 
     Determinism/oracle parity: candidate-pair similarities round to
     4dp (canonical dot/|a|/|b| op order); the greedy argmax breaks
     score ties on smallest neighbor_id. ``1 - lam`` is computed ONCE
     here and its exact double is embedded in the oracle literal
     (1 - 0.7 in binary is 0.30000000000000004, not the SQL literal
-    0.3). Returns (query_id, neighbor_id, mmr_score 4dp,
+    0.3). Returns a pandas frame (query_id, neighbor_id, mmr_score 4dp,
     mmr_rank 1..k)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     from lakehouse_to_rag_spark.operators.similarity import (
         _batch_cosines,
@@ -952,6 +1038,54 @@ def _mmr_greedy(cv: DataFrame, k: int, lam: float) -> DataFrame:
     )
 
     onemlam = 1.0 - lam
+    pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
+    m = np.array(list(pdf["nv"]), dtype=np.float64)
+    norms = np.linalg.norm(m, axis=1)
+    norms[norms == 0] = np.nan
+    psim = _round_away(_batch_cosines(m, m, norms), 4)
+    rel = pdf["rel"].to_numpy(dtype=np.float64)
+    n = len(pdf)
+    sel: list[int] = []
+    ids, scores_out, ranks = [], [], []
+    for step in range(1, min(k, n) + 1):
+        if sel:
+            pen = psim[:, sel].max(axis=1)
+            scores = lam * rel - onemlam * pen
+        else:
+            scores = lam * rel
+        scores = scores.copy()
+        scores[sel] = -np.inf
+        best = int(np.argmax(scores))  # first max = smallest id on ties
+        sel.append(best)
+        ids.append(int(pdf["neighbor_id"].iloc[best]))
+        scores_out.append(float(_round_away(scores[best], 4)))
+        ranks.append(step)
+    return pd.DataFrame(
+        {
+            "query_id": np.full(len(ids), pdf["query_id"].iloc[0], dtype=np.int64),
+            "neighbor_id": ids,
+            "mmr_score": scores_out,
+            "mmr_rank": ranks,
+        }
+    )
+
+
+def _mmr_greedy(cv: DataFrame, k: int, lam: float) -> DataFrame:
+    """``_mmr_select`` per query over ``cv`` = (query_id, neighbor_id,
+    rel, nv), Arrow-grouped: ONE implementation serves both the
+    cosine-relevance form (``mmr_rerank``) and the pre-scored form
+    (``mmr_rerank_scored``), so the two can never drift.
+
+    Scale shape: the greedy stage shuffles only queries x n_candidates
+    rows and runs per-query on the bounded candidate set (O(k * n) per
+    query) — nothing corpus-sized. Returns (query_id, neighbor_id,
+    mmr_score 4dp, mmr_rank 1..k)."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+    )
 
     out_schema = StructType(
         [
@@ -961,43 +1095,9 @@ def _mmr_greedy(cv: DataFrame, k: int, lam: float) -> DataFrame:
             StructField("mmr_rank", LongType()),
         ]
     )
-
-    # unannotated: under ``from __future__ import annotations`` the
-    # hints are strings, and applyInPandas warns on every call that it
-    # cannot infer an eval type from them
-    def greedy(_key, pdf):
-        pdf = pdf.sort_values("neighbor_id").reset_index(drop=True)
-        m = np.array(list(pdf["nv"]), dtype=np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0] = np.nan
-        psim = _round_away(_batch_cosines(m, m, norms), 4)
-        rel = pdf["rel"].to_numpy(dtype=np.float64)
-        n = len(pdf)
-        sel: list[int] = []
-        ids, scores_out, ranks = [], [], []
-        for step in range(1, min(k, n) + 1):
-            if sel:
-                pen = psim[:, sel].max(axis=1)
-                scores = lam * rel - onemlam * pen
-            else:
-                scores = lam * rel
-            scores = scores.copy()
-            scores[sel] = -np.inf
-            best = int(np.argmax(scores))  # first max = smallest id on ties
-            sel.append(best)
-            ids.append(int(pdf["neighbor_id"].iloc[best]))
-            scores_out.append(float(_round_away(scores[best], 4)))
-            ranks.append(step)
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(ids), _key[0], dtype=np.int64),
-                "neighbor_id": ids,
-                "mmr_score": scores_out,
-                "mmr_rank": ranks,
-            }
-        )
-
-    return cv.groupBy("query_id").applyInPandas(greedy, out_schema)
+    return cv.groupBy("query_id").applyInPandas(
+        lambda _key, pdf: _mmr_select(pdf, k, lam), out_schema
+    )
 
 
 def mmr_rerank(
@@ -1018,7 +1118,7 @@ def mmr_rerank(
     Scale shape: the candidate fetch is the two-phase broadcast kNN
     (no all-pairs, no corpus shuffle); candidate vectors ride a
     broadcast hash join back onto the corpus scan. Relevance is the
-    kNN's 4dp cosine; greedy mechanics in ``_mmr_greedy``."""
+    kNN's 4dp cosine; greedy mechanics in ``_mmr_select``."""
     from lakehouse_to_rag_spark.operators.similarity import knn_bruteforce
 
     if not 1 <= k <= k_candidates:
@@ -1050,11 +1150,11 @@ def mmr_rerank_scored(
     comes from the fused ranker, diversity from the vector space.
 
     The caller guarantees every candidate id resolves in ``vectors``
-    (the join is inner; ``rag_read_path`` guarantees it by building
-    candidates from the embedded store). ``rel`` should be scaled
+    (the join is inner). ``rel`` should be scaled
     commensurate with cosine similarity (e.g. min-max normalized to
-    [0, 1]) or the lam trade-off is meaningless. Greedy mechanics,
-    determinism contract and output schema are ``_mmr_greedy``'s."""
+    [0, 1]) or the lam trade-off is meaningless. Greedy mechanics and
+    determinism contract are ``_mmr_select``'s, the output schema
+    ``_mmr_greedy``'s."""
     if k < 1:
         raise ValueError(f"mmr_rerank_scored: need k >= 1, got {k}")
     cv = vectors.select(
@@ -1111,7 +1211,8 @@ def rag_read_path(
     vector_topk=None,
     lexical_topk=None,
 ) -> DataFrame:
-    """The full RAG serving read path as ONE composed plan:
+    """The full RAG serving read path. Spark ranks; the driver does
+    everything bounded by queries x candidates:
 
     1. store   — the embedded corpus: documents with non-null text AND
                  a vector (you only serve what is in the vector store;
@@ -1124,41 +1225,45 @@ def rag_read_path(
                  round; constant lists map to rel=1.0), so the MMR
                  lambda trades fused relevance against redundancy on a
                  cosine-commensurate scale.
-    6. MMR     — greedy diversity selection of ``k`` (mmr_rerank_scored).
+    6. MMR     — greedy diversity selection of ``k`` (``_mmr_select``).
     7. serve   — join document metadata (source, content_length).
 
-    Scale shape: the query side is collected once, by two single-scan
-    collects — the query texts from ``docs`` and the query vectors
-    from ``embeddings`` — and the store rule (the id has both) is
-    applied on the driver; the backends get driver-local frames
+    Scale shape (the distributed top-k shape of REPOSE, PAPERS.md:
+    bounded top-k lists computed on the workers, merged at the
+    coordinator): Spark runs three rounds of two concurrent collects
+    (``_concurrently``). (a) The query side — the query texts from
+    ``docs`` and the query vectors from ``embeddings``, one
+    single-scan collect each; the store rule (the id has both) is
+    applied on the driver and the backends get driver-local frames
     (``local_df``), so a served backend derives its terms, buckets and
-    probes without a job. Stages 2-3 are the proven broadcast shapes
-    (query terms / query vectors broadcast onto one corpus or index
-    scan each). Stages 4-6 touch only queries x candidates rows, all
-    on one partition: each backend's top-list is coalesced after its
-    per-query rank window (``_fuse_hybrid``), so the re-rank, the RRF
-    join and the rel window need no exchange. The MMR vector join and
-    the stage-7 metadata join read ``embeddings`` and the non-null
-    ``docs`` directly: the candidates are ids of the store, and an
-    inner join onto each of the store's two sides yields the rows the
-    store itself would, duplicate ids included, without re-deriving
-    its semi-joins per query. The in-memory backends still rank over
-    the store (``rag_store``: shuffle-free semi-joins that broadcast
-    the smaller embedding-id side).
+    probes without a job. (b) Stages 2-3, the backend top-lists (query
+    terms / query vectors broadcast onto one corpus or index scan
+    each), fused on the driver (``_fuse_hybrid``). (c) The candidates'
+    vectors from ``embeddings`` and their metadata from the non-null
+    ``docs``, filtered to the fused ids: the candidates are ids of the
+    store, and an inner join onto each of the store's two sides yields
+    the rows the store itself would, duplicate ids included, without
+    re-deriving its semi-joins per query. Stages 4-7 run on the
+    driver; the RRF score and the rel floor are Spark's own
+    expressions over driver-local frames (``_local_eval``), so they
+    launch no job. The in-memory backends still rank over the store
+    (``rag_store``: shuffle-free semi-joins that broadcast the smaller
+    embedding-id side).
 
-    Returns (query_id, mmr_rank, doc_id, rrf_score, rel, mmr_score,
-    source, content_length)."""
-    from pyspark.sql import Window as W
+    Returns a driver-local frame (query_id, mmr_rank, doc_id,
+    rrf_score, rel, mmr_score, source, content_length); collecting it
+    launches no job."""
+    import pandas as pd
+
+    from lakehouse_to_rag_spark.sources.tables import local_df
 
     if not 1 <= k <= kc:
         raise ValueError(f"rag_read_path: need 1 <= k={k} <= kc={kc}")
 
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     store, emb_store = rag_store(
         docs, embeddings, id_col, text_col, vec_id_col, vec_col
     )
-    # the query side: one single-scan collect per input, the store
+    # (a) the query side: one single-scan collect per input, the store
     # rule (the id has both a text and a vector) applied on the driver
     texts = docs.filter(
         F.col(text_col).isNotNull() & F.col(id_col).isin(query_ids)
@@ -1167,15 +1272,15 @@ def rag_read_path(
         F.col(vec_id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
     )
     vecs = emb.filter(F.col("vec_id").isin(query_ids))
-    text_rows, vec_rows = texts.collect(), vecs.collect()
-    text_ids, vec_ids = {r[0] for r in text_rows}, {r[0] for r in vec_rows}
     spark = docs.sparkSession
+    text_rows, vec_rows = _concurrently(spark, texts.collect, vecs.collect)
+    text_ids, vec_ids = {r[0] for r in text_rows}, {r[0] for r in vec_rows}
 
-    # stages 2-4 ARE hybrid_retrieval_rrf's fusion over the embedded
-    # store — one implementation, so the self-hit/rank-contiguity
-    # discipline and any future vector-backend swap cannot drift
-    # between the standalone operator and this composition
-    fused = _fuse_hybrid(
+    # (b) stages 2-4 ARE hybrid_retrieval_rrf's fusion over the
+    # embedded store — one implementation, so the self-hit/rank-
+    # contiguity discipline and any future vector-backend swap cannot
+    # drift between the standalone operator and this composition
+    fused, _ = _fuse_hybrid(
         store,
         emb_store,
         local_df(
@@ -1192,45 +1297,93 @@ def rag_read_path(
         vector_topk,
         lexical_topk,
     )
-    wq = W.partitionBy("query_id")
-    mn, mx = F.min("rrf_score").over(wq), F.max("rrf_score").over(wq)
+    # stage 5: min-max over each query's kc-deep fused list
+    bounds: dict = {}
+    for q, _, _, s in fused:
+        lo, hi = bounds.get(q, (s, s))
+        bounds[q] = (min(lo, s), max(hi, s))
+    mn, mx = F.col("mn"), F.col("mx")
     rel = F.when(mx == mn, F.lit(1.0)).otherwise(
         F.floor(
             (F.col("rrf_score") - mn) / (mx - mn) * F.lit(10000.0) + F.lit(0.5)
         )
         / F.lit(10000.0)
     )
-    cand = fused.select(
+    cand = _local_eval(
+        spark,
+        [(q, d, s, *bounds[q]) for q, _, d, s in fused],
+        T.StructType.fromDDL(
+            "query_id long, doc_id long, rrf_score double, mn double, "
+            "mx double"
+        ),
         "query_id",
-        F.col("doc_id").alias("neighbor_id"),
+        "doc_id",
         "rrf_score",
-        rel.alias("rel"),
+        rel,
     )
 
-    # candidates come from the store, so inner joins onto each side of
-    # it give the rows the store itself would: no semi-join needed
-    picked = mmr_rerank_scored(cand, emb, k=k, lam=lam)
-    meta = docs.filter(F.col(text_col).isNotNull()).select(
+    # (c) the candidates' vectors and metadata
+    ids = sorted({r[1] for r in cand})
+    cand_vecs = emb.filter(F.col("vec_id").isin(ids)).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("nv"),
+    )
+    meta = docs.filter(
+        F.col(text_col).isNotNull() & F.col(id_col).isin(ids)
+    ).select(
         F.col(id_col).alias("neighbor_id"),
         "source",
         F.length(text_col).cast("long").alias("content_length"),
     )
-    return (
-        picked.join(
-            F.broadcast(cand.select("query_id", "neighbor_id", "rrf_score", "rel")),
-            ["query_id", "neighbor_id"],
+    vec_by_id: dict = {}
+    meta_by_id: dict = {}
+    if ids:
+        vec_hits, meta_hits = _concurrently(
+            spark, cand_vecs.collect, meta.collect
         )
-        .join(meta, "neighbor_id")
-        .select(
-            "query_id",
-            F.col("mmr_rank").cast("long").alias("mmr_rank"),
-            F.col("neighbor_id").alias("doc_id"),
-            "rrf_score",
-            "rel",
-            "mmr_score",
-            "source",
-            "content_length",
+        for i, nv in vec_hits:
+            vec_by_id.setdefault(i, []).append(nv)
+        for i, *m in meta_hits:
+            meta_by_id.setdefault(i, []).append(m)
+
+    # stages 6-7, with the inner joins' multiplicity: every vector row
+    # of a candidate enters MMR, and a pick joins back every fused row
+    # of its (query, id) and every metadata row of its id
+    cand_by_query: dict = {}
+    for q, d, s, r in cand:
+        cand_by_query.setdefault(q, []).append((d, s, r))
+    out = []
+    for q, rows in cand_by_query.items():
+        cv = [(q, d, r, nv) for d, _, r in rows for nv in vec_by_id.get(d, [])]
+        if not cv:
+            continue
+        picked = _mmr_select(
+            pd.DataFrame(cv, columns=["query_id", "neighbor_id", "rel", "nv"]),
+            k,
+            lam,
         )
+        for _, d, score, rank in picked.itertuples(index=False):
+            out += [
+                (q, int(rank), d, s, r, float(score), *m)
+                for dd, s, r in rows
+                if dd == d
+                for m in meta_by_id.get(d, [])
+            ]
+    return local_df(
+        spark,
+        out,
+        T.StructType(
+            [
+                T.StructField("query_id", T.LongType()),
+                T.StructField("mmr_rank", T.LongType()),
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("rrf_score", T.DoubleType()),
+                T.StructField("rel", T.DoubleType()),
+                T.StructField("mmr_score", T.DoubleType()),
+                meta.schema["source"],
+                T.StructField("content_length", T.LongType()),
+            ]
+        ),
     )
 
 

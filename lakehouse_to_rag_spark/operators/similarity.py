@@ -951,39 +951,11 @@ def ivf_topk_kmeans(
 ) -> DataFrame:
     """IVF search over k-means-refined centroids (higher recall than
     the untrained quantizer at the same nprobe)."""
-    cent_df = kmeans_centroids(corpus, num_centroids, iterations, id_col, vec_col)
-    cent = F.broadcast(cent_df)
-    cent_rows = [
-        (int(r[0]), [float(x) for x in r[1]]) for r in cent_df.collect()
-    ]
+    cent = kmeans_centroids(corpus, num_centroids, iterations, id_col, vec_col)
+    cent_rows = [(int(r[0]), [float(x) for x in r[1]]) for r in cent.collect()]
     assigned = _gemm_assign(corpus, cent_rows, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("qcsim"), F.asc("centroid_id")
-    )
-    probes = (
-        q.crossJoin(cent)
-        .select(
-            "query_id",
-            "qvec",
-            "centroid_id",
-            # 12dp tolerance: near-tie probe selection must resolve by
-            # centroid_id identically in every engine (oracle matches)
-            F.round(
-                cosine_similarity(F.col("qvec"), F.col("cvec")), 12
-            ).alias("qcsim"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= nprobe)
-        .select("query_id", "qvec", F.col("centroid_id").alias("cluster"))
-    )
-    sim = F.round(cosine_similarity(F.col("qvec"), F.col(vec_col)), 4)
-    pairs = (
-        assigned.join(F.broadcast(probes), "cluster")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("cosine"))
-    )
-    return _ranked_topk(pairs, k)
+    probes = _query_probes(queries, cent, nprobe, id_col, vec_col)
+    return _score_probed(assigned, probes, k, id_col, vec_col)
 
 
 def knn_self_ivf(

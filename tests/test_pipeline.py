@@ -227,6 +227,38 @@ def test_medallion_incremental_crash_replay(spark, sf_dir, tmp_path):
         assert a == b and a, layer
 
 
+def test_medallion_incremental_first_batch_reads_no_missing_layer(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The first batch finds that bronze does not exist from the
+    layout: ``read_layer`` is never asked for a missing path (that read
+    fails analysis, and Spark's query listeners log the failure at
+    ERROR). The second batch reads bronze for its admission anti-join."""
+    import os
+
+    from lakehouse_to_rag_spark.operators.pipeline import (
+        documents_as_raw,
+        run_medallion_incremental,
+    )
+    from lakehouse_to_rag_spark.sources import lakehouse
+
+    reads = []
+    read_layer = lakehouse.read_layer
+
+    def spy(spark_, path, *a, **kw):
+        reads.append((path, os.path.exists(path)))
+        return read_layer(spark_, path, *a, **kw)
+
+    monkeypatch.setattr(lakehouse, "read_layer", spy)
+    raw = documents_as_raw(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    state = str(tmp_path / "state")
+    run_medallion_incremental(spark, [raw.filter("doc_id < 20")], state)
+    assert reads and all(exists for _, exists in reads), reads
+    reads.clear()
+    run_medallion_incremental(spark, [raw.filter("doc_id >= 20")], state)
+    assert (f"{state}/bronze", True) in reads
+
+
 def test_observed_medallion_metrics_match_direct_aggregates(spark, sf_dir):
     """Observation metrics (computed inside the job, zero extra scan)
     must equal the values a separate aggregation job computes, and one

@@ -136,6 +136,45 @@ class TestRrfFusion:
         out = rrf_fuse(a, b, k=5).collect()
         assert len(out) == 1 and out[0]["doc_id"] == 10
 
+    def test_driver_fusion_equals_rrf_fuse(self, spark):
+        """Seeded property: the driver fusion (``_fuse_rows``) returns
+        the rows of the Spark composition it replaces — the lexical
+        self-hit drop and re-rank, then ``rrf_fuse`` — on random ranked
+        lists with score ties, documents in only one list and
+        self-hits."""
+        import random
+
+        from pyspark.sql import Window
+        from pyspark.sql import types as T
+
+        from lakehouse_to_rag_spark.operators.retrieval import _fuse_rows
+
+        rng = random.Random(9)
+        schema = "query_id long, rank long, doc_id long"
+        for k, candidates, c in ((3, 4, 60), (5, 6, 1), (8, 3, 0), (4, 5, 2)):
+            lex, vec = [], []
+            for q in range(4):
+                ld = rng.sample(range(12), rng.randint(0, 8))
+                if q not in ld and rng.random() < 0.7:
+                    ld.insert(rng.randrange(len(ld) + 1), q)  # self-hit
+                vd = rng.sample([d for d in range(12) if d != q],
+                                rng.randint(0, 6))
+                lex += [(q, r, d) for r, d in enumerate(ld, 1)]
+                vec += [(q, r, d) for r, d in enumerate(vd, 1)]
+            ranked = Window.partitionBy("query_id").orderBy("rank")
+            lex_df = (
+                spark.createDataFrame(lex, schema)
+                .filter(F.col("query_id") != F.col("doc_id"))
+                .withColumn("rank", F.row_number().over(ranked))
+                .filter(F.col("rank") <= candidates)
+            )
+            want = rrf_fuse(
+                lex_df, spark.createDataFrame(vec, schema), k=k, c=c
+            ).collect()
+            got = _fuse_rows(spark, lex, vec, k, candidates, c, T.LongType())
+            assert sorted(got) == sorted(map(tuple, want)), (k, candidates, c)
+            assert want
+
 
 class TestHybrid:
     def test_contract(self, spark, sf_dir):
@@ -428,20 +467,86 @@ class TestRagReadPath:
         assert rels[0] == 0.0 and rels[-1] == 1.0
 
     def test_plan_shape(self, spark, sf_dir):
-        """No cartesian anywhere in the composed plan; the metadata
-        and candidate-vector joins broadcast."""
+        """Spark's part of the read path is the two backend top-lists:
+        neither plans a cartesian product, and each broadcasts its
+        query side onto its one corpus scan."""
         from lakehouse_to_rag_spark.operators.retrieval import rag_read_path
+        from lakehouse_to_rag_spark.operators.similarity import knn_bruteforce
 
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        plan = (
-            rag_read_path(d, e, query_ids=[0, 1, 2])
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
+        built = []
+
+        def record(backend):
+            def run(*a, **kw):
+                built.append(backend(*a, **kw))
+                return built[-1]
+
+            return run
+
+        rag_read_path(
+            d, e, query_ids=[0, 1, 2],
+            lexical_topk=record(bm25_topk),
+            vector_topk=record(knn_bruteforce),
+        ).collect()
+        assert len(built) == 2
+        for df in built:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "CartesianProduct" not in plan
+            assert "BroadcastExchange" in plan
+
+    def test_duplicate_ids_keep_join_multiplicity(self, spark):
+        """A candidate with two (identical) embedding rows and a
+        document with two metadata rows: every vector row enters MMR,
+        and each pick joins back every fused row of its id and every
+        metadata row — the rows the composed Spark plan returned
+        before the tail moved to the driver."""
+        from lakehouse_to_rag_spark.operators.retrieval import rag_read_path
+
+        docs = spark.createDataFrame(
+            [
+                (0, "red apple pie recipe", "q"),
+                (1, "red apple tart", "s1"),
+                (2, "green apple pie", "s2"),
+                (3, "apple pie with red berries", "s3"),
+                (4, "pie crust recipe", "s4"),
+                (5, "red apple", "a"),
+                (5, "red apple cider recipe", "b"),
+                (6, "banana bread", "s6"),
+            ],
+            "doc_id long, text string, source string",
         )
-        assert "CartesianProduct" not in plan
-        assert "BroadcastHashJoin" in plan
+        emb = spark.createDataFrame(
+            [
+                (0, [1.0, 0.5, 0.0]),
+                (1, [0.9, 0.4, 0.1]),
+                (2, [0.2, 0.9, 0.3]),
+                (3, [0.8, 0.1, 0.6]),
+                (3, [0.8, 0.1, 0.6]),
+                (4, [0.1, 0.2, 0.9]),
+                (5, [0.7, 0.7, 0.0]),
+                (6, [0.0, 0.1, 1.0]),
+            ],
+            "vec_id long, embedding array<double>",
+        )
+        out = rag_read_path(docs, emb, [0], candidates=6, kc=6, k=6, lam=0.7)
+        assert sorted(map(tuple, out.collect())) == [
+            (0, 1, 5, 0.032522, 1.0, 0.7, "a", 9),
+            (0, 1, 5, 0.032522, 1.0, 0.7, "b", 22),
+            (0, 2, 1, 0.032018, 0.7125, 0.2202, "s1", 14),
+            (0, 3, 3, 0.031498, 0.4159, 0.1428, "s3", 26),
+            (0, 3, 3, 0.031746, 0.5573, 0.1428, "s3", 26),
+            (0, 4, 3, 0.031498, 0.4159, 0.0901, "s3", 26),
+            (0, 4, 3, 0.031746, 0.5573, 0.0901, "s3", 26),
+            (0, 5, 4, 0.031281, 0.2921, -0.0015, "s4", 16),
+            (0, 6, 3, 0.031498, 0.4159, -0.0089, "s3", 26),
+            (0, 6, 3, 0.031746, 0.5573, -0.0089, "s3", 26),
+        ]
+        assert out.schema.simpleString() == (
+            "struct<query_id:bigint,mmr_rank:bigint,doc_id:bigint,"
+            "rrf_score:double,rel:double,mmr_score:double,source:string,"
+            "content_length:bigint>"
+        )
 
 
 class TestRagIndexBuild:
@@ -1099,14 +1204,24 @@ class TestServePath:
         assert res.collect()
 
     def test_served_read_path_job_budget(self, spark, served_indexes):
-        """One served query — both query collects, the plan and its
-        collect — stays within 16 Spark jobs."""
+        """One served query — the query collects, the two backend
+        top-lists and the candidate fetch — stays within 13 Spark
+        jobs."""
         d, e, _, bm25, ivf = served_indexes
         rows, launched, _ = _jobs_between_markers(
             spark, lambda: _serve(spark, d, e, bm25, ivf, [0]).collect()
         )
         assert rows
-        assert len(launched) <= 16
+        assert len(launched) <= 13
+
+    def test_served_result_collects_without_job(self, spark, served_indexes):
+        """The served read path returns a driver-local frame: collecting
+        it launches no Spark job."""
+        d, e, _, bm25, ivf = served_indexes
+        out = _serve(spark, d, e, bm25, ivf, [0])
+        rows, launched, _ = _jobs_between_markers(spark, out.collect)
+        assert rows
+        assert launched == set()
 
     def test_driver_probes_match_query_probes(self, spark):
         """_driver_probes ranks as _query_probes does: an exact 12dp tie
