@@ -106,14 +106,14 @@ def write_scheme(
         swap_in,
     )
     from lakehouse_to_rag_spark.sources.lakehouse import write_layer
-    from lakehouse_to_rag_spark.sources.tables import tiny_df
+    from lakehouse_to_rag_spark.sources.tables import local_df
 
     final = os.path.join(table_path, "_scheme")
     recover(final)
     tmp = staging_path(final)
     schema = ", ".join(f"{k} int" for k in fields)
     write_layer(
-        tiny_df(spark, [tuple(fields.values())], schema),
+        local_df(spark, [tuple(fields.values())], schema),
         tmp,
         fmt="parquet",
     )

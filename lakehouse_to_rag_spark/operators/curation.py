@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.functions.text import normalize_text
+from lakehouse_to_rag_spark.sources.tables import local_df
 
 
 def md5_bucket(col: Column, salt: str, m: int) -> Column:
@@ -173,7 +174,8 @@ def domain_mix_sample(
     """
     spark = df.sparkSession
     wdf = F.broadcast(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(g, float(w)) for g, w in weights.items()],
             f"{group_col} string, w double",
         )
@@ -501,7 +503,7 @@ def admit_batch(
             .select("content_fp")
         )
     else:
-        snapshot = spark.createDataFrame([], "content_fp string")
+        snapshot = local_df(spark, [], "content_fp string")
     admitted = _keep_first_fresh(keyed, snapshot, id_col)
     staging = os.path.join(f"{fp_table_path}__staging", uuid.uuid4().hex)
     write_layer(admitted, staging)
@@ -929,9 +931,7 @@ def kcenter_select(
         )
 
     spark = embeddings.sparkSession
-    from lakehouse_to_rag_spark.sources.tables import tiny_df
-
-    return tiny_df(
+    return local_df(
         spark,
         [(c[0], c[1], c[2]) for c in centers],
         f"rank long, {id_col} long, radius double",
@@ -1034,7 +1034,7 @@ def training_shards_assign(
         offsets.append((pid, acc))
         acc += per_pid[pid]
     off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+        local_df(spark, offsets or [(0, 0)], "_pid int, _off long")
     )
     w = (
         Window.partitionBy("_pid")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.operators.similarity import _round_away
+from lakehouse_to_rag_spark.sources.tables import local_df
 
 
 # ---------------------------------------------------------------- exact
@@ -2217,9 +2218,7 @@ def admit_media_batch(
             .select("simhash", "blk", "bval")
         )
     else:
-        snap_bands = spark.createDataFrame(
-            [], "simhash long, blk int, bval long"
-        )
+        snap_bands = local_df(spark, [], "simhash long, blk int, bval long")
     admitted = incremental_media_dedup(
         sigs, snap_bands, max_hamming, num_bands, snapshot_banded=True
     )
@@ -2759,8 +2758,10 @@ def _tf_cosine_dense(
     words = sorted(r["word"] for r in freq.select("word").collect())
     nv = len(words)
     vocab_df = F.broadcast(
-        spark.createDataFrame(
-            [(w, i) for i, w in enumerate(words)], "word string, vid int"
+        local_df(
+            spark,
+            [(w, i) for i, w in enumerate(words)],
+            "word string, vid int",
         )
     )
 
@@ -3010,9 +3011,8 @@ def tf_cosine_pairs(
     if nv == 0:
         # all-empty/whitespace corpus: no terms, no pairs — short-
         # circuit instead of letting the dense branch divide by nv
-        return df.sparkSession.createDataFrame(
-            [],
-            "id_a long, id_b long, cosine double",
+        return local_df(
+            df.sparkSession, [], "id_a long, id_b long, cosine double"
         )
     if nv <= dense_vocab_limit:
         if dense_block_rows is None:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from lakehouse_to_rag_spark.operators.bronze import bronze_transform
 from lakehouse_to_rag_spark.operators.gold import gold_transform
 from lakehouse_to_rag_spark.operators.silver import silver_transform
+from lakehouse_to_rag_spark.session import concurrently
 from lakehouse_to_rag_spark.sources.tables import load_table
 
 # Fixed timestamp for deterministic pipeline runs (oracle comparison).
@@ -168,22 +169,13 @@ def run_medallion_incremental(
             # LAST position is load-bearing. Measured at sf0.1: the
             # 4-batch maintained run 7.0 s -> 5.8 s warm (the second
             # upsert's tasks back-fill the first's write/commit tail).
-            from concurrent.futures import ThreadPoolExecutor
-
-            from lakehouse_to_rag_spark.session import pool_task
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fs = pool.submit(
-                    pool_task(spark, upsert_by_key),
-                    spark, paths["silver"], fresh, ["url"],
-                )
-                fg = pool.submit(
-                    pool_task(spark, upsert_by_key),
-                    spark, paths["gold"], gold_b,
-                    ["url", "chunk_index"],
-                )
-                fs.result()
-                fg.result()
+            concurrently(
+                spark,
+                lambda: upsert_by_key(spark, paths["silver"], fresh, ["url"]),
+                lambda: upsert_by_key(
+                    spark, paths["gold"], gold_b, ["url", "chunk_index"]
+                ),
+            )
         # bronze upserts LAST: admission keys on bronze, so a url only
         # becomes "seen" once its whole turn committed. A crash between
         # any two upserts replays cleanly — silver/gold upserts are

@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lakehouse_to_rag_spark.session import concurrently
+from lakehouse_to_rag_spark.sources.tables import local_df
+
 
 def _doc_terms(
     docs: DataFrame, id_col: str, text_col: str
@@ -77,8 +80,6 @@ def _local_query_terms(
     Catalyst folds into a driver-local ``queries``, so the collect then
     launches no job — and the (query_id, word) pairs are deduplicated
     in Python; a null text has no terms."""
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     split = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.split(F.lower(F.col(query_text_col)), " ", -1).alias("words"),
@@ -243,21 +244,14 @@ def write_bm25_index(
     # one-task control writes overlap (guide §2.6 — disjoint aux dirs,
     # no ordering constraint inside a fresh build; the postings write
     # above already materialized the `narrow` checkpoint both ride).
-    from concurrent.futures import ThreadPoolExecutor
-
-    from lakehouse_to_rag_spark.session import pool_task
-
-    spark = docs.sparkSession
     ids_df = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("id")
     )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fs = pool.submit(
-            pool_task(spark, write_layer), stats_df, f"{path}/_stats"
-        )
-        fi = pool.submit(pool_task(spark, write_layer), ids_df, f"{path}/_ids")
-        fs.result()
-        fi.result()
+    concurrently(
+        docs.sparkSession,
+        lambda: write_layer(stats_df, f"{path}/_stats"),
+        lambda: write_layer(ids_df, f"{path}/_ids"),
+    )
     return fmt
 
 
@@ -344,8 +338,6 @@ def _read_partitions(
     import os
 
     from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     names = _data_names(root)
     parts = {_partition_value(n, col): n for n in names or ()}
     wanted = sorted(set(values))
@@ -591,9 +583,7 @@ def append_to_bm25_index(
     n = int(obs.get["n"])
     n_docs = int(stats["n_docs"]) + int(batch["nb"] or 0)
     sum_dl = int(stats["sum_dl"]) + int(batch["sb"] or 0)
-    from lakehouse_to_rag_spark.sources.tables import tiny_df
-
-    new_stats = tiny_df(
+    new_stats = local_df(
         spark,
         [(n_docs, sum_dl, sum_dl / n_docs, n_buckets)],
         "n_docs long, sum_dl long, avgdl double, n_buckets long",
@@ -601,8 +591,6 @@ def append_to_bm25_index(
     # staged write + swap: _stats is replaced whole, never
     # overwritten in place, so a crash can leave it STALE (see the
     # half-commit caveat above) but never TORN.
-    # (tiny_df is already one slice — a coalesce(1) here used to cost
-    # 4.5 s serially re-evaluating 32 pickled slices, see tables.py)
     sdir = os.path.join(path, "_stats")
     tmp = staging_path(sdir)
     write_layer(new_stats, tmp)
@@ -643,7 +631,7 @@ def rebuild_bm25_stats(spark, path: str) -> None:
     recover(sdir)
     idir = os.path.join(path, "_ids")
     recover(idir)
-    n_buckets = int(read_layer(spark, sdir).collect()[0]["n_buckets"])
+    n_buckets = int(_read_control_rows(spark, sdir)[0]["n_buckets"])
     id_dl = (
         read_layer(spark, path)
         .select("id", "dl")
@@ -845,14 +833,12 @@ def hybrid_retrieval_rrf(
     by queries x candidates rows and runs on the driver, so the result
     is a driver-local frame (``local_df``) that launches no job when
     collected."""
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     queries_txt = docs.filter(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(text_col).alias("query")
     )
     qe = embeddings.filter(F.col("vec_id").isin(query_ids))
     spark = docs.sparkSession
-    txt_rows, qe_rows = _concurrently(
+    txt_rows, qe_rows = concurrently(
         spark, queries_txt.collect, qe.collect
     )
     rows, schema = _fuse_hybrid(
@@ -871,28 +857,11 @@ def hybrid_retrieval_rrf(
     return local_df(spark, rows, schema)
 
 
-def _concurrently(spark, *fns) -> list:
-    """Each of ``fns`` called in its own pool thread (``pool_task``
-    keeps the caller's job group); their results in order. The
-    read path's collects are small and latency-bound, so overlapping
-    them overlaps their scheduling and planning, not just their
-    tasks."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from lakehouse_to_rag_spark.session import pool_task
-
-    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
-        futures = [pool.submit(pool_task(spark, fn)) for fn in fns]
-        return [f.result() for f in futures]
-
-
 def _local_eval(spark, rows: list, schema: T.StructType, *cols) -> list:
     """``cols`` evaluated over driver ``rows``: a projection of a
     driver-local frame, which Catalyst folds into the
     ``LocalRelation`` (the ``similarity._driver_probes`` precedent),
     so Spark's own expression semantics hold and no job launches."""
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     if not rows:
         return []
     return local_df(spark, rows, schema).select(*cols).collect()
@@ -977,9 +946,9 @@ def _fuse_hybrid(
     """``hybrid_retrieval_rrf``'s fusion over given query frames:
     (query_id, query) texts and query embeddings. Spark computes the
     two backend top-lists, each built and collected in its own pool
-    thread (``_concurrently``) so their jobs overlap; the fusion of
-    the at most queries x (candidates+1) rows they return runs on the
-    driver (``_fuse_rows``). Returns the fused (query_id, rank,
+    thread (``session.concurrently``) so their jobs overlap; the
+    fusion of the at most queries x (candidates+1) rows they return
+    runs on the driver (``_fuse_rows``). Returns the fused (query_id, rank,
     doc_id, rrf_score) rows and their schema (the id columns take the
     lexical top-list's type)."""
     from lakehouse_to_rag_spark.operators.similarity import knn_bruteforce
@@ -1003,7 +972,7 @@ def _fuse_hybrid(
             "query_id", "rank", "neighbor_id"
         ).collect()
 
-    (id_type, lex), vec = _concurrently(docs.sparkSession, lexical, vector)
+    (id_type, lex), vec = concurrently(docs.sparkSession, lexical, vector)
     rows = _fuse_rows(docs.sparkSession, lex, vec, k, candidates, c, id_type)
     return rows, T.StructType(
         [
@@ -1231,8 +1200,8 @@ def rag_read_path(
     Scale shape (the distributed top-k shape of REPOSE, PAPERS.md:
     bounded top-k lists computed on the workers, merged at the
     coordinator): Spark runs three rounds of two concurrent collects
-    (``_concurrently``). (a) The query side — the query texts from
-    ``docs`` and the query vectors from ``embeddings``, one
+    (``session.concurrently``). (a) The query side — the query texts
+    from ``docs`` and the query vectors from ``embeddings``, one
     single-scan collect each; the store rule (the id has both) is
     applied on the driver and the backends get driver-local frames
     (``local_df``), so a served backend derives its terms, buckets and
@@ -1255,8 +1224,6 @@ def rag_read_path(
     launches no job."""
     import pandas as pd
 
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     if not 1 <= k <= kc:
         raise ValueError(f"rag_read_path: need 1 <= k={k} <= kc={kc}")
 
@@ -1273,7 +1240,7 @@ def rag_read_path(
     )
     vecs = emb.filter(F.col("vec_id").isin(query_ids))
     spark = docs.sparkSession
-    text_rows, vec_rows = _concurrently(spark, texts.collect, vecs.collect)
+    text_rows, vec_rows = concurrently(spark, texts.collect, vecs.collect)
     text_ids, vec_ids = {r[0] for r in text_rows}, {r[0] for r in vec_rows}
 
     # (b) stages 2-4 ARE hybrid_retrieval_rrf's fusion over the
@@ -1338,7 +1305,7 @@ def rag_read_path(
     vec_by_id: dict = {}
     meta_by_id: dict = {}
     if ids:
-        vec_hits, meta_hits = _concurrently(
+        vec_hits, meta_hits = concurrently(
             spark, cand_vecs.collect, meta.collect
         )
         for i, nv in vec_hits:
@@ -1482,32 +1449,25 @@ def build_rag_indexes(
     # sequential because driver code calls them sequentially; the
     # second index's tasks back-fill executors idled by the first's
     # stage tails and single-task stats/centroid writes). Each build's
-    # exceptions surface via .result(); pool_task keeps the caller's
-    # job group on the pool's jobs.
-    from concurrent.futures import ThreadPoolExecutor
-
-    from lakehouse_to_rag_spark.session import pool_task
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_bm25 = pool.submit(
-            pool_task(spark, write_bm25_index),
+    # exceptions surface from ``concurrently``, which keeps the
+    # caller's job group on the pool's jobs.
+    concurrently(
+        spark,
+        lambda: write_bm25_index(
             chunks,
             f"{base_path}/bm25",
             n_buckets=n_buckets,
             id_col="chunk_id",
             text_col="chunk",
-        )
-        f_ivf = pool.submit(
-            pool_task(spark, write_ivf_index),
+        ),
+        lambda: write_ivf_index(
             emb,
             f"{base_path}/ivf",
             num_centroids=num_centroids,
             id_col="chunk_id",
             vec_col="embedding",
-        )
-        f_bm25.result()
-        f_ivf.result()
-
+        ),
+    )
     return _index_manifest(spark, base_path)
 
 
@@ -1554,8 +1514,6 @@ def _index_manifest(spark, base_path: str) -> DataFrame:
     layer). The result is a driver-local frame, so collecting it
     launches no job."""
     from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     ivf_dir, bm25_dir = f"{base_path}/ivf", f"{base_path}/bm25"
     ivf = _partition_rowcounts(ivf_dir, "cluster")
     if ivf is None:

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.functions.vectors import cosine_similarity
+from lakehouse_to_rag_spark.sources.tables import local_df
 
 
 def _wide(df: DataFrame) -> DataFrame:
@@ -217,8 +218,6 @@ def ivf_assign(
     (``kmeans_centroids``) seeds from the first k DISTINCT vectors
     and is the production path for such data.
     """
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     cent_src = (
         corpus.orderBy(F.col(id_col)).limit(num_centroids).select(
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("cvec")
@@ -636,8 +635,6 @@ def _driver_probes(
     launches no job; the ranking is ``_rank_probes``."""
     from pyspark.sql import types as T
 
-    from lakehouse_to_rag_spark.sources.tables import local_df
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
@@ -925,9 +922,7 @@ def kmeans_centroids(
         _assert_nonzero_centroids(cent_rows, "kmeans_centroids")
 
     spark = corpus.sparkSession
-    from lakehouse_to_rag_spark.sources.tables import tiny_df
-
-    return tiny_df(
+    return local_df(
         spark,
         [(cid, vec) for cid, vec in cent_rows],
         StructType(
@@ -1870,7 +1865,7 @@ def ivfpq_topk(
     ]
     spark = codes_df.sparkSession
     probes_df = F.broadcast(
-        spark.createDataFrame(probes, "query_id long, cluster long")
+        local_df(spark, probes, "query_id long, cluster long")
     )
 
     qidx = {int(q): i for i, q in enumerate(qids)}
@@ -2010,7 +2005,8 @@ def write_ivfpq_index(
     codes = ivfpq_encode(corpus, coarse, books, id_col, vec_col)
     fmt = write_layer(codes, path, partition_by=["cluster"])
     write_layer(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [(i, [float(x) for x in row]) for i, row in enumerate(coarse)],
             "centroid_id long, cvec array<double>",
         ),
@@ -2018,7 +2014,8 @@ def write_ivfpq_index(
     )
     m_, k_, d_ = books.shape
     write_layer(
-        spark.createDataFrame(
+        local_df(
+            spark,
             [
                 (j, c, [float(x) for x in books[j, c]])
                 for j in range(m_)
@@ -2041,21 +2038,23 @@ def ivfpq_topk_from_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index: rebuild the (tiny) model state
-    from ``_coarse``/``_codebooks``, then score exactly like the
-    in-memory path — the cluster equi-join prunes to the probed
-    ``cluster=N/`` directories."""
+    from ``_coarse``/``_codebooks`` (``retrieval._read_control_rows``,
+    with its Spark fallback), then score exactly like the in-memory
+    path — the cluster equi-join prunes to the probed ``cluster=N/``
+    directories."""
     import numpy as np
 
+    from lakehouse_to_rag_spark.operators.retrieval import _read_control_rows
     from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
     coarse_rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in read_layer(spark, f"{path}/_coarse").collect()
+        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
+        for r in _read_control_rows(spark, f"{path}/_coarse")
     )
     coarse = np.array([r[1] for r in coarse_rows], dtype=np.float64)
     book_rows = sorted(
-        (int(r[0]), int(r[1]), [float(x) for x in r[2]])
-        for r in read_layer(spark, f"{path}/_codebooks").collect()
+        (int(r["subspace"]), int(r["code"]), [float(x) for x in r["cvec"]])
+        for r in _read_control_rows(spark, f"{path}/_codebooks")
     )
     m = 1 + max(r[0] for r in book_rows)
     kc = 1 + max(r[1] for r in book_rows)

@@ -28,7 +28,7 @@ from lakehouse_to_rag_spark.operators import text_analysis as ta
 from lakehouse_to_rag_spark.operators import tpch
 from lakehouse_to_rag_spark.operators.gold import gold_transform_fixed_stride
 from lakehouse_to_rag_spark.operators.pipeline import run_medallion
-from lakehouse_to_rag_spark.sources.tables import load_table, tiny_df
+from lakehouse_to_rag_spark.sources.tables import load_table, local_df
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -144,7 +144,7 @@ def medallion_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(state, ignore_errors=True)
-    return tiny_df(
+    return local_df(
         spark,
         rows,
         "url string, source string, title string, doc_id bigint, "
@@ -884,7 +884,7 @@ def dedup_jaccard_auto_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the SQL-replayed dispatch rule and both planted regimes'
     pairs at once."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    extra = tiny_df(
+    extra = local_df(
         spark,
         [(900001, _CJK_A), (900002, _CJK_B), (900003, _CJK_C)],
         "doc_id long, text string",
@@ -906,7 +906,7 @@ def dedup_minhash_auto_unit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1). Same mixed fixture and exact-Jaccard oracle as the
     jaccard twin (banding miss < 1e-4 at the gate thresholds)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    extra = tiny_df(
+    extra = local_df(
         spark,
         [(900001, _CJK_A), (900002, _CJK_B), (900003, _CJK_C)],
         "doc_id long, text string",
@@ -1129,7 +1129,7 @@ def decontaminate_fuzzy_auto_unit(
     ``decontaminate_fuzzy``. One hash proves the SQL-replayed
     dispatch and both regimes' screens."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    extra = tiny_df(
+    extra = local_df(
         spark,
         [(910001, _CJK_A), (910010, _CJK_B)],
         "doc_id long, text string",
@@ -6409,9 +6409,9 @@ def rag_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BM25 posting-list and IVF serving layouts into uuid staging,
     then return the manifest read back FROM THE WRITTEN FILES (per-
     cluster vector counts, posting totals, chunk count). The manifest
-    is bounded (num_centroids + 2 rows), so it is collected eagerly
-    and staging is reclaimed before returning — the admit_batch
-    staging discipline."""
+    is bounded (num_centroids + 2 rows) and comes back as a
+    driver-local frame, so staging is reclaimed before returning —
+    the admit_batch staging discipline."""
     import shutil
     import uuid
 
@@ -6420,11 +6420,9 @@ def rag_index_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     staging = f"/tmp/rag_index_staging/{uuid.uuid4().hex}"
     try:
-        manifest = build_rag_indexes(d, staging, dim=64, num_centroids=16)
-        rows = manifest.collect()
+        return build_rag_indexes(d, staging, dim=64, num_centroids=16)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return tiny_df(spark, rows, manifest.schema)
 
 
 def _doc_pagerank_oracle(k: int = 5, damping_pct: int = 85,
@@ -6913,7 +6911,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_to_rag_spark.operators.retrieval import bm25_topk
 
     d = load_table(spark, sf_dir, "documents")
-    queries = tiny_df(
+    queries = local_df(
         spark, _BM25_QUERIES, "query_id long, query string"
     )
     return bm25_topk(d, queries, k=5)
@@ -6941,7 +6939,7 @@ def bm25_served_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    queries = tiny_df(
+    queries = local_df(
         spark, _BM25_QUERIES, "query_id long, query string"
     )
     staging = f"/tmp/bm25_inc_{uuid.uuid4().hex[:12]}"
@@ -6952,7 +6950,7 @@ def bm25_served_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = served.collect()
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return tiny_df(spark, rows, served.schema)
+    return local_df(spark, rows, served.schema)
 
 
 # Hybrid = BM25 over the query document's own text + exact cosine kNN,
@@ -7615,7 +7613,7 @@ def remove_duplicate_spans_auto_unit_docs(
     single-unit span plans (both rowed via their gated twins) behind
     one row predicate — bench policy rule 3."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    extra = tiny_df(
+    extra = local_df(
         spark,
         [(900001, _CJK_A), (900002, _CJK_B), (900003, _CJK_C)],
         "doc_id long, text string",
@@ -8683,8 +8681,9 @@ def rag_read_path_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing), both plugged into rag_read_path's backend slots. The
     oracle is rag_read_path's VERBATIM: the served stack must
     reproduce the composed in-memory plan bit-for-bit. Indexes build
-    into uuid staging; the bounded result (queries x k rows) is
-    collected eagerly and staging reclaimed before returning."""
+    into uuid staging; the bounded result (queries x k rows) comes
+    back as a driver-local frame, so staging is reclaimed before
+    returning."""
     import shutil
     import uuid
 
@@ -8698,6 +8697,7 @@ def rag_read_path_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_topk_from_index,
         write_ivf_index,
     )
+    from lakehouse_to_rag_spark.session import concurrently
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
@@ -8718,21 +8718,14 @@ def rag_read_path_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # independent layouts into disjoint subtrees: overlap the two
         # builds (guide §2.6 — the build_rag_indexes discipline)
-        from concurrent.futures import ThreadPoolExecutor
-
-        from lakehouse_to_rag_spark.session import pool_task
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(
-                pool_task(spark, write_bm25_index), store, f"{staging}/bm25"
-            )
-            fv = pool.submit(
-                pool_task(spark, write_ivf_index), emb_store, f"{staging}/ivf",
-                num_centroids=16,
-            )
-            fb.result()
-            fv.result()
-        served = rag_read_path(
+        concurrently(
+            spark,
+            lambda: write_bm25_index(store, f"{staging}/bm25"),
+            lambda: write_ivf_index(
+                emb_store, f"{staging}/ivf", num_centroids=16
+            ),
+        )
+        return rag_read_path(
             store, emb_store, query_ids=[0, 1, 2], candidates=10, kc=8,
             k=4, lam=0.7, c=60,
             lexical_topk=lambda docs, q, k, id_col, text_col:
@@ -8741,10 +8734,8 @@ def rag_read_path_served(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ivf_topk_from_index(spark, f"{staging}/ivf", q, k=k,
                                     nprobe=16),
         )
-        rows = served.collect()
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    return tiny_df(spark, rows, served.schema)
 
 
 # =====================================================================

@@ -62,6 +62,21 @@ def pool_task(spark: SparkSession, fn):
     return fn if wrap is spark else wrap(fn)
 
 
+def concurrently(spark: SparkSession, *fns) -> list:
+    """Each of ``fns`` (no arguments) called in its own pool thread
+    (``pool_task``, so their jobs keep the caller's job group); their
+    results in order. Every fn runs to the end; the first failing
+    fn's exception is raised once all have finished. Overlapping
+    independent actions overlaps their scheduling and planning, and
+    one action's tasks back-fill the cores the other's stage tails
+    leave idle."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(pool_task(spark, fn)) for fn in fns]
+    return [f.result() for f in futures]
+
+
 _BLAS_ENV_VARS = (
     "OPENBLAS_NUM_THREADS",
     "OMP_NUM_THREADS",

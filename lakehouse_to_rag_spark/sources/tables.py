@@ -103,41 +103,35 @@ def maybe_parallelize(
     return df.repartition(target)
 
 
-def tiny_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """``createDataFrame`` for DRIVER-BOUNDED tiny row lists (ledger
-    markers, one-row stats, bounded collected results) without the
-    default fan-out (r13 optimization round): a bare
-    ``createDataFrame(rows)`` parallelizes into defaultParallelism
-    pickled slices, so any downstream single-task consumer — a
-    ``coalesce(1)`` write being the worst case — iterates every slice
-    through its own Python-worker round-trip (measured: a ONE-ROW
-    ``coalesce(1)`` parquet write cost 4.5 s at 32 slices vs 0.26 s at
-    one slice; even the plain 32-slice write/count pays ~0.5 s of
-    parallel worker spin-up for zero parallelism benefit). One slice
-    is the right layout for data that is tiny BY CONTRACT; anything
-    unbounded keeps the default path.
-
-    The one rule between this and ``local_df``: rows that Spark jobs
-    write or join take ``tiny_df`` (one slice, one task, one file);
-    rows that are collected or broadcast — where a job per action is
-    the whole cost — take ``local_df``."""
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema
-    )
-
-
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """A driver-LOCAL frame for driver-bounded rows (a collected
-    quantizer, a footer-read manifest): built through pandas + Arrow,
-    it plans as a ``LocalRelation``, so ``collect()`` and a broadcast
-    of it launch no Spark job (``tiny_df``'s ``LogicalRDD`` launches
-    one per action; see ``tiny_df`` for which to use). A write of it
-    fans out to up to defaultParallelism files — ``coalesce(1)`` a
-    single-file write."""
-    import pandas as pd
+    """The one frame over driver-held rows (ledger markers, one-row
+    stats, a collected quantizer, a served query's bounded state).
+    ``schema`` is a ``StructType`` or a DDL string.
 
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=schema.names)
-    return spark.createDataFrame(pdf, schema)
+    The rows are built column by column into a ``pyarrow.Table`` with
+    the Arrow types of ``schema`` (each value passed through its Spark
+    type's ``toInternal`` first, as the row path does), so every value
+    round-trips exactly: longs above 2**53 next to a null, NaN, nested
+    types, and the empty list. The frame is an exact ``LocalRelation``
+    with ``schema`` as given, nullability included: a collect or a
+    broadcast of it launches no Spark job, and a write of n rows makes
+    min(n, defaultParallelism) files."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = []
+    for i, (field, arrow_field) in enumerate(zip(schema.fields, arrow_schema)):
+        values = [r[i] for r in rows]
+        if field.dataType.needConversion():
+            values = [field.dataType.toInternal(v) for v in values]
+        columns.append(pa.array(values, type=arrow_field.type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

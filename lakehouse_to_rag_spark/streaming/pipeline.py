@@ -827,10 +827,10 @@ def _ledgered_index_sink(
         if batch_id in committed:
             return  # replay of an already-committed batch
         append_fn(batch, batch_id)
-        from lakehouse_to_rag_spark.sources.tables import tiny_df
+        from lakehouse_to_rag_spark.sources.tables import local_df
 
         write_layer(
-            tiny_df(spark, [(int(batch_id),)], "batch_id long"),
+            local_df(spark, [(int(batch_id),)], "batch_id long"),
             ledger,
             mode="append",
         )

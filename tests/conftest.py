@@ -19,3 +19,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def jobs_between_markers(spark, fn):
+    """Run ``fn`` between two marker jobs under a fresh job group.
+    Returns (fn's result, ids of every job launched between the
+    markers, ids of the jobs carrying the group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+        out = fn()
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    return out, set(range(min(in_group) + 1, max(in_group))), in_group

@@ -112,10 +112,10 @@ def _bm25_append_run(spark, sf_dir, root):
 def _bm25_stale_setup(spark, sf_dir, root):
     """An index whose ``_stats`` and ``_ids`` are stale-low, the state
     a half-committed append leaves for ``rebuild_bm25_stats``."""
-    from lakehouse_to_rag_spark.sources.tables import tiny_df
+    from lakehouse_to_rag_spark.sources.tables import local_df
 
     _bm25_setup(spark, sf_dir, root)
-    tiny_df(
+    local_df(
         spark, [(1, 1, 1.0, 8)],
         "n_docs long, sum_dl long, avgdl double, n_buckets long",
     ).write.mode("overwrite").parquet(f"{root}/bm25/_stats")
@@ -296,35 +296,76 @@ def test_swap_in_single_rename_when_dst_absent(tmp_path):
     assert os.listdir(tmp_path) == ["layer"]
 
 
-def test_directory_renames_only_in_swap_module():
-    """Directory swaps go through ``sources.dirswap`` only: an AST scan
-    of the package finds every ``os.rename``/``os.replace`` call (and
-    its enclosing function, to name the offender) outside that
-    module. There must be none."""
-    found = []
+def _package_nodes():
+    """(module path relative to the package, AST node, name of the
+    innermost enclosing function or None) for every node of every
+    package module."""
     for py in sorted(PKG.rglob("*.py")):
         rel = py.relative_to(PKG).as_posix()
-        if rel == "sources/dirswap.py":
-            continue
         tree = ast.parse(py.read_text(), filename=str(py))
         scopes = [
             n for n in ast.walk(tree)
             if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
         ]
         for node in ast.walk(tree):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("rename", "replace")
-                and isinstance(node.func.value, ast.Name)
-                and node.func.value.id == "os"
-            ):
-                owner = max(
-                    (s for s in scopes
-                     if s.lineno <= node.lineno <= s.end_lineno),
-                    key=lambda s: s.lineno, default=None,
-                )
-                found.append((rel, owner and owner.name))
+            line = getattr(node, "lineno", 0)
+            owner = max(
+                (s for s in scopes if s.lineno <= line <= s.end_lineno),
+                key=lambda s: s.lineno, default=None,
+            )
+            yield rel, node, owner and owner.name
+
+
+def test_directory_renames_only_in_swap_module():
+    """Directory swaps go through ``sources.dirswap`` only: an AST scan
+    of the package finds every ``os.rename``/``os.replace`` call (and
+    its enclosing function, to name the offender) outside that
+    module. There must be none."""
+    found = [
+        (rel, owner)
+        for rel, node, owner in _package_nodes()
+        if rel != "sources/dirswap.py"
+        and isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("rename", "replace")
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "os"
+    ]
+    assert found == []
+
+
+# The corpus generators whose rows feed the parallel media decoders:
+# they keep ``createDataFrame``'s defaultParallelism fan-out on purpose.
+_SYNTH_TABLES = {
+    f"synth_{kind}_table"
+    for kind in ("media", "bmp", "png", "wav", "flac", "gif", "avi", "mp4")
+}
+
+
+def test_driver_rows_only_through_local_df():
+    """Driver-held rows become a frame through ``sources.tables.
+    local_df`` only: an AST scan of the package finds every
+    ``createDataFrame``/``parallelize`` reference outside
+    ``sources/tables.py`` and the multimodal ``synth_*_table``
+    generators, and every identifier spelled like the deleted one-slice
+    builder. There must be none."""
+    deleted = "tiny" + "_df"  # two parts: a text search finds no use
+    found = []
+    for rel, node, owner in _package_nodes():
+        if deleted in (
+            getattr(node, "id", None),
+            getattr(node, "attr", None),
+            getattr(node, "name", None),
+            getattr(node, "asname", None),
+        ):
+            found.append((rel, deleted, owner))
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("createDataFrame", "parallelize")
+            and rel != "sources/tables.py"
+            and not (rel == "multimodal/ops.py" and owner in _SYNTH_TABLES)
+        ):
+            found.append((rel, node.attr, owner))
     assert found == []
 
 

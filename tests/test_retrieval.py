@@ -17,6 +17,7 @@ from lakehouse_to_rag_spark.operators.retrieval import (
     rrf_fuse,
     write_bm25_index,
 )
+from tests.conftest import jobs_between_markers
 
 
 def _queries(spark, rows):
@@ -642,7 +643,7 @@ class TestRagIndexBuild:
 
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         base = str(tmp_path / "ragidx")
-        _, launched, in_group = _jobs_between_markers(
+        _, launched, in_group = jobs_between_markers(
             spark,
             lambda: build_rag_indexes(d, base, num_centroids=8).collect(),
         )
@@ -658,7 +659,7 @@ class TestRagIndexBuild:
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         base = str(tmp_path / "ragidx")
         manifest = build_rag_indexes(d, base, num_centroids=8)
-        rows, launched, _ = _jobs_between_markers(spark, manifest.collect)
+        rows, launched, _ = jobs_between_markers(spark, manifest.collect)
         assert launched == set()
         assert sorted(map(tuple, rows)) == _spark_manifest(spark, base)
         assert [f.name for f in manifest.schema] == ["index", "part", "n_rows"]
@@ -699,7 +700,7 @@ class TestRagIndexBuild:
                 os.path.join(cdir, part), os.path.join(cdir, "part-copy")
             )
 
-        rows, launched, _ = _jobs_between_markers(
+        rows, launched, _ = jobs_between_markers(
             spark, lambda: _index_manifest(spark, base).collect()
         )
         assert launched  # the Spark fallback ran
@@ -720,26 +721,6 @@ class TestRagIndexBuild:
 
         monkeypatch.setattr(SparkContext, "_gateway", object())
         assert pool_task(spark, fn) is fn
-
-
-def _jobs_between_markers(spark, fn):
-    """Run ``fn`` between two marker jobs under a fresh job group.
-    Returns (fn's result, ids of every job launched between the
-    markers, ids of the jobs carrying the group)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        sc.parallelize([0], 1).count()
-        out = fn()
-        sc.parallelize([0], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
-    return out, set(range(min(in_group) + 1, max(in_group))), in_group
 
 
 def _spark_manifest(spark, base):
@@ -1186,7 +1167,7 @@ class TestServePath:
 
         _, _, emb_store, bm25, ivf = served_indexes
         q = _local_text(spark, [(0, "the data pipeline"), (1, "Fast  SCAN")])
-        res, launched, _ = _jobs_between_markers(
+        res, launched, _ = jobs_between_markers(
             spark, lambda: bm25_topk_from_index(spark, bm25, q, k=5)
         )
         assert launched == set()
@@ -1196,7 +1177,7 @@ class TestServePath:
             [tuple(r) for r in emb_store.filter("vec_id < 3").collect()],
             emb_store.schema,
         )
-        res, launched, _ = _jobs_between_markers(
+        res, launched, _ = jobs_between_markers(
             spark,
             lambda: ivf_topk_from_index(spark, ivf, qv, k=5, nprobe=4),
         )
@@ -1208,7 +1189,7 @@ class TestServePath:
         top-lists and the candidate fetch — stays within 13 Spark
         jobs."""
         d, e, _, bm25, ivf = served_indexes
-        rows, launched, _ = _jobs_between_markers(
+        rows, launched, _ = jobs_between_markers(
             spark, lambda: _serve(spark, d, e, bm25, ivf, [0]).collect()
         )
         assert rows
@@ -1219,7 +1200,7 @@ class TestServePath:
         it launches no Spark job."""
         d, e, _, bm25, ivf = served_indexes
         out = _serve(spark, d, e, bm25, ivf, [0])
-        rows, launched, _ = _jobs_between_markers(spark, out.collect)
+        rows, launched, _ = jobs_between_markers(spark, out.collect)
         assert rows
         assert launched == set()
 
@@ -1373,4 +1354,7 @@ class TestServePath:
             not in present
         )
         q = _local_text(spark, [(0, word)])
-        assert bm25_topk_from_index(spark, path, q, k=5).collect() == []
+        served = bm25_topk_from_index(spark, path, q, k=5)
+        rows, launched, _ = jobs_between_markers(spark, served.collect)
+        assert rows == []
+        assert launched == set()
