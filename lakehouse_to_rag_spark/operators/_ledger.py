@@ -63,14 +63,12 @@ def migrate_ledger(
 
 def compact_ledger(spark: SparkSession, path: str, split_col: str) -> int:
     """Compact a bucketed ledger through the shared
-    ``_compact_index_layout`` swap, ``_scheme`` carried verbatim.
-    Single-writer contract: run with the ingest loop QUIESCED.
-    Returns the data file count written."""
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _compact_index_layout,
-    )
+    ``sources.index_layout.compact`` swap, ``_scheme`` carried
+    verbatim. Single-writer contract: run with the ingest loop
+    QUIESCED. Returns the data file count written."""
+    from lakehouse_to_rag_spark.sources import index_layout
 
-    return _compact_index_layout(
+    return index_layout.compact(
         spark, path, "bucket",
         carry_dirs=("_scheme",), rewrite_dirs=(), split_col=split_col,
     )

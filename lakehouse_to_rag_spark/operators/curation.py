@@ -394,7 +394,7 @@ def migrate_fp_table(
 def compact_fp_table(spark: SparkSession, fp_table_path: str) -> int:
     """Maintenance-window compaction of the bucketed fingerprint
     ledger — the manual form of the per-bucket-depth trigger inside
-    ``admit_batch``. Same shared ``_compact_index_layout`` swap,
+    ``admit_batch``. Same shared ``index_layout.compact`` swap,
     ``_scheme`` carried verbatim; run with the ingest loop QUIESCED.
     Returns the data file count written."""
     from lakehouse_to_rag_spark.operators._ledger import compact_ledger
@@ -434,7 +434,7 @@ def admit_batch(
       buckets. Scheme recorded in ``{path}/_scheme``; a pre-r13 flat
       table migrates once, atomically (``migrate_fp_table``).
     - compaction on per-bucket file depth through the shared
-      ``_compact_index_layout`` swap (``_scheme`` carried verbatim).
+      ``index_layout.compact`` swap (``_scheme`` carried verbatim).
       Each call first runs ``sources.dirswap.recover`` on the table,
       so a migration or compaction swap that died mid-way is healed
       before the table is read.

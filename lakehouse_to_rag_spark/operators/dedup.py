@@ -1446,7 +1446,7 @@ def simhash_numpy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     each) so per-group overhead amortizes."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
     from lakehouse_to_rag_spark.sources.tables import maybe_parallelize
 
@@ -1457,8 +1457,6 @@ def simhash_numpy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).filter(F.length("word") > 0)
     hashed = words.select("id", F.xxhash64("word").alias("h"))
 
-    # explicit functionType: stringized annotations hide the hint
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
     def _sim(h):
         a = h.to_numpy().astype(np.uint64)
         bits = ((a[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).sum(
@@ -1471,6 +1469,10 @@ def simhash_numpy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 out |= np.uint64(1) << np.uint64(b)
         return int(out.astype(np.int64))
 
+    # Series -> scalar hints make it grouped-aggregate; set as objects,
+    # since postponed annotations could not see the local ``pd``
+    _sim.__annotations__ = {"h": pd.Series, "return": int}
+    _sim = pandas_udf("long")(_sim)
     return hashed.groupBy("id").agg(_sim("h").alias("simhash"))
 
 
@@ -2138,7 +2140,7 @@ def admit_media_batch(
     bucket per batch, so the trigger is the MAX per-bucket file count
     (> ``compact_files_threshold``) — the same per-batch cadence as
     the flat layout — compacted through the shared
-    ``_compact_index_layout`` swap (``_scheme`` carried verbatim).
+    ``index_layout.compact`` swap (``_scheme`` carried verbatim).
     Each call first runs ``sources.dirswap.recover`` on the ledger,
     so a migration or compaction swap that died mid-way is healed
     before the ledger is read.

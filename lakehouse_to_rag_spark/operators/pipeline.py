@@ -108,7 +108,6 @@ def run_medallion_incremental(
     """
     import os
 
-    from lakehouse_to_rag_spark.operators.retrieval import _data_names
     from lakehouse_to_rag_spark.sources.lakehouse import (
         read_layer,
         upsert_by_key,
@@ -122,13 +121,17 @@ def run_medallion_incremental(
             id_cols=("url", "source", "title", "doc_id", "lang"),
             processed_at=ts,
         )
-        # first batch: no bronze dir, or one that lists no data entries
-        # (``_data_names``' rule; it returns None for a delta layer,
-        # which does hold data). Reading a missing layer fails analysis,
-        # and Spark's query listeners log that failure at ERROR.
-        first = (
-            not os.path.isdir(paths["bronze"])
-            or _data_names(paths["bronze"]) == []
+        # first batch: no bronze dir, or one that lists no data entry
+        # (every name ``_``/``.``-prefixed) and no ``_delta_log`` (a
+        # delta layer does hold data). Reading a missing layer fails
+        # analysis, and Spark's query listeners log that failure at
+        # ERROR.
+        names = (
+            os.listdir(paths["bronze"])
+            if os.path.isdir(paths["bronze"]) else []
+        )
+        first = "_delta_log" not in names and all(
+            n.startswith(("_", ".")) for n in names
         )
         seen = (
             None if first

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lakehouse_to_rag_spark.session import concurrently
+from lakehouse_to_rag_spark.sources import index_layout
 from lakehouse_to_rag_spark.sources.tables import local_df
 
 
@@ -209,9 +210,9 @@ def write_bm25_index(
     search-engine layout (Lucene stores per-doc norms alongside
     postings): scoring then needs NO corpus-sized join at query time,
     only the pruned scan + a broadcast of the query terms. The dl/df
-    joins are paid ONCE at build time. Returns the format written."""
-    from lakehouse_to_rag_spark.sources.lakehouse import write_layer
-
+    joins are paid ONCE at build time. The layout is
+    ``sources.index_layout``'s: plain parquet. Returns the format
+    written."""
     tf, dl = _doc_terms(docs, id_col, text_col)
     df_ = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     # sum_dl is the EXACT integer the incremental path needs: appends
@@ -233,7 +234,7 @@ def write_bm25_index(
         )
         .select("bucket", "word", "id", "tf", "dl", "df")
     )
-    fmt = write_layer(postings, path, partition_by=["bucket"])
+    fmt = index_layout.write(postings, path, "bucket")
     # `_ids` sidecar (r14, guide §5/§1.2): the DISTINCT indexed doc-id
     # set — exactly the docs `_doc_terms` admits (non-null text), so
     # its row count equals `_stats.n_docs` when the two are in sync.
@@ -249,141 +250,10 @@ def write_bm25_index(
     )
     concurrently(
         docs.sparkSession,
-        lambda: write_layer(stats_df, f"{path}/_stats"),
-        lambda: write_layer(ids_df, f"{path}/_ids"),
+        lambda: index_layout.write(stats_df, f"{path}/_stats"),
+        lambda: index_layout.write(ids_df, f"{path}/_ids"),
     )
     return fmt
-
-
-def _data_names(dirpath: str) -> list[str] | None:
-    """Names of a layer dir's data entries — everything but the
-    ``_``/``.``-prefixed ones Spark skips (``_SUCCESS``, ``.crc``
-    sidecars, ``_stats``-style control tables) — or None when the dir
-    is missing or is a delta layer: a delta layer's live file set is
-    the LOG's, not the dir listing's (tombstoned files linger), so
-    footers can't be trusted and callers fall back to the format-aware
-    Spark read."""
-    import os
-
-    try:
-        names = os.listdir(dirpath)
-    except OSError:
-        return None
-    if "_delta_log" in names:
-        return None
-    return [n for n in names if not n.startswith(("_", "."))]
-
-
-def _parquet_files(dirpath: str) -> list[str] | None:
-    """Data files of a plain-parquet layer dir, or None when the dir
-    is missing or holds anything but parquet (e.g. a delta layer) —
-    callers then fall back to a Spark read."""
-    import os
-
-    names = _data_names(dirpath)
-    if not names or not all(n.endswith((".parquet", ".crc")) for n in names):
-        return None
-    files = [os.path.join(dirpath, n) for n in names if n.endswith(".parquet")]
-    return files or None
-
-
-def _read_control_rows(spark, sdir: str) -> list[dict]:
-    """Every row of a small index control table (``_stats``,
-    ``_centroids``) as dicts, read via parquet footers on the driver
-    when the layer is plain parquet (r14, guide §5: the rows are a few
-    hundred bytes of control state — a Spark read plus collect cost a
-    schema-inference job and a collect job per append/serve).
-    Value-exact: the parquet doubles/longs/float arrays decode to the
-    same Python values a ``collect()`` returns. Falls back to the Spark
-    read for any other layout (delta, mixed dirs)."""
-    files = _parquet_files(sdir)
-    if files is not None:
-        try:
-            import pyarrow.parquet as pq
-
-            rows: list[dict] = []
-            for f in sorted(files):
-                rows += pq.read_table(f).to_pylist()
-            return rows
-        except Exception:
-            pass  # unreadable footer: let Spark produce the real error
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-
-    return [r.asDict() for r in read_layer(spark, sdir).collect()]
-
-
-def _partition_value(name: str, col: str) -> int | None:
-    """N for a ``{col}=N`` partition dir name, else None."""
-    key, sep, val = name.partition("=")
-    if key != col or not sep or not val.lstrip("-").isdecimal():
-        return None
-    return int(val)
-
-
-def _read_partitions(
-    spark, root: str, col: str, values: list[int]
-) -> DataFrame:
-    """The rows of ``root``'s ``{col}=N`` partitions for N in
-    ``values``, read by path: only those dirs are handed to Spark (with
-    ``basePath``, so ``col`` is still a column). Partition discovery
-    over the root lists every partition dir, with a distributed job
-    past 32 paths, and infers the schema with another job; here the
-    schema comes from a data file's footer, where Spark stores its
-    StructType, and ``col`` is added as the ``int`` discovery infers.
-    Values without a dir contribute no rows. Falls back to the
-    discovery read plus a literal ``isin`` filter whenever the layout
-    is not plain parquet (``_data_names``/``_parquet_files``' rule: a
-    ``_delta_log``, a stray file, a missing dir) or the footer carries
-    no Spark schema."""
-    import os
-
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-    names = _data_names(root)
-    parts = {_partition_value(n, col): n for n in names or ()}
-    wanted = sorted(set(values))
-    if parts and None not in parts:
-        dirs = [os.path.join(root, parts[v]) for v in wanted if v in parts]
-        files = [
-            _parquet_files(d) for d in dirs or [os.path.join(root, names[0])]
-        ]
-        schema = _spark_footer_schema(files[0][0]) if all(files) else None
-        if schema is not None:
-            schema = schema.add(col, T.IntegerType())
-            if not dirs:
-                return local_df(spark, [], schema)
-            return (
-                spark.read.schema(schema).option("basePath", root).parquet(*dirs)
-            )
-    return read_layer(spark, root).filter(F.col(col).isin(wanted))
-
-
-def _spark_footer_schema(path: str) -> T.StructType | None:
-    """The StructType Spark stores in the footer of each parquet file
-    it writes, or None when the file carries none or is unreadable."""
-    import json
-
-    import pyarrow.parquet as pq
-
-    try:
-        meta = pq.read_schema(path).metadata or {}
-        row_meta = meta[b"org.apache.spark.sql.parquet.row.metadata"]
-        return T.StructType.fromJson(json.loads(row_meta))
-    except (OSError, KeyError, ValueError):
-        return None
-
-
-def _parquet_rowcount(dirpath: str) -> int | None:
-    """Total row count of a plain-parquet dir from file footers (no
-    Spark job, no data read) — None when the dir isn't plain parquet."""
-    files = _parquet_files(dirpath)
-    if files is None:
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
-        return None
 
 
 def append_to_bm25_index(
@@ -442,14 +312,11 @@ def append_to_bm25_index(
         staging_path,
         swap_in,
     )
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        write_layer,
-    )
 
     recover(os.path.join(path, "_stats"))
     recover(os.path.join(path, "_ids"))
-    stats = _read_control_rows(spark, os.path.join(path, "_stats"))[0]
+    index_layout.partitions(path, "bucket")  # refuse a foreign tree
+    stats = index_layout.read_rows(f"{path}/_stats")[0]
     if "sum_dl" not in stats:
         raise ValueError(
             "append_to_bm25_index: index _stats lacks sum_dl (written "
@@ -513,13 +380,12 @@ def append_to_bm25_index(
         ids_dir = os.path.join(path, "_ids")
         # coverage gate from parquet FOOTERS (driver-side metadata, no
         # Spark job): the sidecar is trusted only when it provably
-        # covers the index. Non-parquet layouts return None and take
-        # the full-scan fallback.
-        n_side = _parquet_rowcount(ids_dir)
+        # covers the index.
+        n_side = index_layout.row_count(ids_dir)
         if n_side is not None and n_side >= int(stats["n_docs"]):
-            membership = read_layer(spark, ids_dir)
+            membership = index_layout.read(spark, ids_dir)
         else:  # sidecar absent or stale-low: full scan (pre-r14 path)
-            membership = read_layer(spark, path).select("id")
+            membership = index_layout.read(spark, path).select("id")
         n_dup = (
             membership
             .join(F.broadcast(new_ids), "id", "left_semi")
@@ -543,7 +409,7 @@ def append_to_bm25_index(
     # check_disjoint=False — skipping it would leave the sidecar
     # stale-low and silently demote every later append to the full
     # scan.
-    write_layer(
+    index_layout.write(
         new_docs.filter(F.col(text_col).isNotNull()).select(
             F.col(id_col).alias("id")
         ),
@@ -579,7 +445,7 @@ def append_to_bm25_index(
     obs = Observation()
     postings = postings.observe(obs, F.count(F.lit(1)).alias("n"))
     batch = {"nb": pre["nb"], "sb": pre["sb"]}
-    write_layer(postings, path, partition_by=["bucket"], mode="append")
+    index_layout.write(postings, path, "bucket", mode="append")
     n = int(obs.get["n"])
     n_docs = int(stats["n_docs"]) + int(batch["nb"] or 0)
     sum_dl = int(stats["sum_dl"]) + int(batch["sb"] or 0)
@@ -593,7 +459,7 @@ def append_to_bm25_index(
     # half-commit caveat above) but never TORN.
     sdir = os.path.join(path, "_stats")
     tmp = staging_path(sdir)
-    write_layer(new_stats, tmp)
+    index_layout.write(new_stats, tmp)
     swap_in(tmp, sdir)
     return n
 
@@ -622,18 +488,15 @@ def rebuild_bm25_stats(spark, path: str) -> None:
         staging_path,
         swap_in,
     )
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        write_layer,
-    )
 
     sdir = os.path.join(path, "_stats")
     recover(sdir)
     idir = os.path.join(path, "_ids")
     recover(idir)
-    n_buckets = int(_read_control_rows(spark, sdir)[0]["n_buckets"])
+    n_buckets = int(index_layout.read_rows(sdir)[0]["n_buckets"])
+    index_layout.partitions(path, "bucket")  # refuse a foreign tree
     id_dl = (
-        read_layer(spark, path)
+        index_layout.read(spark, path)
         .select("id", "dl")
         .distinct()
         .localCheckpoint(eager=False)
@@ -645,10 +508,10 @@ def rebuild_bm25_stats(spark, path: str) -> None:
         F.lit(n_buckets).cast("long").alias("n_buckets"),
     )
     tmp = staging_path(sdir)
-    write_layer(stats_df.coalesce(1), tmp)
+    index_layout.write(stats_df.coalesce(1), tmp)
     swap_in(tmp, sdir)
     itmp = staging_path(idir)
-    write_layer(id_dl.select("id"), itmp)
+    index_layout.write(id_dl.select("id"), itmp)
     swap_in(itmp, idir)
 
 
@@ -658,7 +521,7 @@ def compact_bm25_index(
     """Small-file compaction for the persisted BM25 posting layout —
     ``append_to_bm25_index`` adds one file per touched ``bucket=N/``
     directory per batch, the same accretion as the IVF appends (the
-    shared ``similarity._compact_index_layout`` core; measured 1.9x
+    shared ``sources.index_layout.compact`` core; measured 1.9x
     serve overhead at 39 batches on the IVF twin, SCALE.md r7).
     ``_stats`` is rewritten to one file, and so is the ``_ledger`` that
     ``stream_bm25_sink`` keeps under the same root — dropping it across
@@ -666,14 +529,10 @@ def compact_bm25_index(
     re-append postings the ledger had already absorbed, and the BM25
     side has no serve-time duplicate absorber. Serve results are
     bit-equal before/after (compact-then-serve equality test). Must be
-    run with any ingest stream quiesced (see ``_compact_index_layout``,
+    run with any ingest stream quiesced (see ``index_layout.compact``,
     which also documents the ``target_rows_per_file`` multi-file
     policy for hot buckets). Returns the data file count written."""
-    from lakehouse_to_rag_spark.operators.similarity import (
-        _compact_index_layout,
-    )
-
-    return _compact_index_layout(
+    return index_layout.compact(
         spark, path, "bucket",
         carry_dirs=(), rewrite_dirs=("_stats", "_ledger", "_ids"),
         target_rows_per_file=target_rows_per_file, split_col="id",
@@ -696,19 +555,16 @@ def bm25_topk_from_index(
     their buckets are Spark's own ``pmod(xxhash64(word), n_buckets)``
     projected over it, so when ``queries`` is driver-local nothing
     launches a job before the final plan. Only the matching
-    ``bucket=N`` dirs are then read, by path (``_read_partitions``; a
-    layout that is not plain parquet falls back to the discovery read
-    with a literal ``isin`` filter); the scoring tail is
+    ``bucket=N`` dirs are then read, by path, from the plain-parquet
+    index tree (``index_layout.read_partitions``); the scoring tail is
     byte-identical to ``bm25_topk`` (shared ``_score_hits``), so
     persisted == in-memory exactly."""
-    import os
-
     # one-row control state via parquet footers (r14, guide §5): the
     # Spark read + collect + broadcast of a 40-byte row cost a
     # scheduler round-trip and a BroadcastExchange per serve call;
     # the values are embedded as literals instead (bit-identical
     # doubles — the decoded parquet value IS the stored double)
-    srow = _read_control_rows(spark, os.path.join(path, "_stats"))[0]
+    srow = index_layout.read_rows(f"{path}/_stats")[0]
     n_buckets = int(srow["n_buckets"])
     qterms = _local_query_terms(queries, query_id_col, query_text_col)
     buckets = sorted(
@@ -719,7 +575,7 @@ def bm25_topk_from_index(
             ).collect()
         }
     )
-    postings = _read_partitions(spark, path, "bucket", buckets)
+    postings = index_layout.read_partitions(spark, path, "bucket", buckets)
     # df is recomputed from the pruned scan, never trusted from the
     # stored column: appends (append_to_bm25_index) change every
     # term's document frequency but cannot rewrite existing posting
@@ -1390,9 +1246,9 @@ def build_rag_indexes(
                  from the written files' parquet footers on the
                  driver and n_docs is the _stats row
                  (``_index_manifest``), so the read-back launches no
-                 Spark job; a layout that is not plain parquet
-                 (delta, a stray file) falls back to a Spark read of
-                 the same layer.
+                 Spark job. Both index trees are plain parquet
+                 (``sources.index_layout``); a tree holding anything
+                 else is refused.
 
     Returns the manifest DataFrame: (index STRING, part BIGINT,
     n_rows BIGINT). Parts: ivf cluster ids; bm25 part -1 = total
@@ -1480,57 +1336,25 @@ _MANIFEST_SCHEMA = T.StructType(
 )
 
 
-def _partition_rowcounts(root: str, col: str) -> dict[int, int] | None:
-    """Row count per ``{col}=N/`` partition dir of a plain-parquet
-    layout, summed from file footers on the driver (no Spark job).
-    Empty partitions are omitted, as a groupBy over the rows would.
-    None when ``root`` or any partition dir is not plain parquet
-    (``_data_names``/``_parquet_files``' rule: a ``_delta_log``, a
-    stray file) or a data entry is not a ``{col}=N`` dir."""
-    import os
-
-    names = _data_names(root)
-    if names is None:
-        return None
-    counts: dict[int, int] = {}
-    for n in names:
-        val = _partition_value(n, col)
-        if val is None:
-            return None
-        rows = _parquet_rowcount(os.path.join(root, n))
-        if rows is None:
-            return None
-        if rows:
-            counts[val] = rows
-    return counts
-
-
 def _index_manifest(spark, base_path: str) -> DataFrame:
     """``build_rag_indexes``' manifest, read back from the written
-    layouts: ivf per-cluster counts and the bm25 posting total are
-    summed from parquet footers, n_docs comes from the ``_stats`` row
-    (``_read_control_rows``). A layout that is not plain parquet falls
-    back to the Spark read-back it replaces (groupBy/count over the
-    layer). The result is a driver-local frame, so collecting it
-    launches no job."""
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-    ivf_dir, bm25_dir = f"{base_path}/ivf", f"{base_path}/bm25"
-    ivf = _partition_rowcounts(ivf_dir, "cluster")
-    if ivf is None:
-        ivf = {
-            int(r[0]): int(r[1])
-            for r in read_layer(spark, ivf_dir)
-            .groupBy("cluster")
-            .agg(F.count(F.lit(1)))
-            .collect()
+    layouts: ivf per-cluster counts (empty clusters omitted, as a
+    groupBy over the rows would) and the bm25 posting total are summed
+    from parquet footers (``index_layout.row_count``), n_docs is the
+    ``_stats`` row. The result is a driver-local frame, so collecting
+    it launches no job."""
+
+    def counts(root: str, col: str) -> dict[int, int]:
+        return {
+            v: n
+            for v, d in index_layout.partitions(root, col).items()
+            if (n := index_layout.row_count(d))
         }
-    bm25 = _partition_rowcounts(bm25_dir, "bucket")
-    n_post = (
-        sum(bm25.values())
-        if bm25 is not None
-        else read_layer(spark, bm25_dir).count()
-    )
-    n_docs = _read_control_rows(spark, f"{bm25_dir}/_stats")[0]["n_docs"]
+
+    bm25_dir = f"{base_path}/bm25"
+    ivf = counts(f"{base_path}/ivf", "cluster")
+    n_post = sum(counts(bm25_dir, "bucket").values())
+    n_docs = index_layout.read_rows(f"{bm25_dir}/_stats")[0]["n_docs"]
     rows = [("ivf", c, n) for c, n in sorted(ivf.items())]
     rows += [("bm25", -1, n_post), ("stats", -1, n_docs)]
     return local_df(spark, rows, _MANIFEST_SCHEMA)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lakehouse_to_rag_spark.functions.vectors import cosine_similarity
+from lakehouse_to_rag_spark.sources import index_layout
 from lakehouse_to_rag_spark.sources.tables import local_df
 
 
@@ -358,9 +359,8 @@ def write_ivf_index(
     checkpoint — ``_is_checkpoint``), the quantizer seeds and the
     cluster assignment both read that checkpoint, and ``_centroids``
     is written from the seed rows already on the driver (one file, as
-    the orderBy+limit it replaces wrote)."""
-    from lakehouse_to_rag_spark.sources.lakehouse import write_layer
-
+    the orderBy+limit it replaces wrote). The layout is
+    ``sources.index_layout``'s: plain parquet."""
     if trained:
         cent = kmeans_centroids(
             corpus, num_centroids, iterations, id_col, vec_col
@@ -376,8 +376,10 @@ def write_ivf_index(
             )
         cent, assigned = ivf_assign(corpus, num_centroids, id_col, vec_col)
         cent = cent.coalesce(1)
-    fmt = write_layer(assigned, path, partition_by=["cluster"])
-    write_layer(cent.select("centroid_id", "cvec"), f"{path}/_centroids")
+    fmt = index_layout.write(assigned, path, "cluster")
+    index_layout.write(
+        cent.select("centroid_id", "cvec"), f"{path}/_centroids"
+    )
     return fmt
 
 
@@ -411,8 +413,6 @@ def append_to_ivf_index(
     because the IVF serve path already absorbs duplicate ids
     (``_score_probed(dedupe_candidates=True)``) where BM25 serving
     has no absorber. Returns the number of vectors appended."""
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer, write_layer
-
     if check_disjoint:
         # Also fail-closed on batch-INTERNAL duplicate ids — the
         # .distinct() below would mask them, and while IVF serving
@@ -436,7 +436,7 @@ def append_to_ivf_index(
             )
         new_ids = new_vectors.select(F.col(id_col).alias("id")).distinct()
         n_dup = (
-            read_layer(spark, path)
+            index_layout.read(spark, path)
             .select(F.col(id_col).alias("id"))
             .join(F.broadcast(new_ids), "id", "left_semi")
             .select(F.countDistinct("id").alias("n"))
@@ -449,7 +449,7 @@ def append_to_ivf_index(
                 "pass check_disjoint=False (the default) if duplicate "
                 "absorption at serve time is acceptable."
             )
-    cent_rows = _centroid_rows(spark, path)
+    cent_rows = index_layout.centroid_rows(path)
     _assert_nonzero_centroids(cent_rows, "append_to_ivf_index")
     assigned = _gemm_assign(new_vectors, cent_rows, id_col, vec_col)
     # count + write in ONE pass via an observed metric (r13
@@ -460,109 +460,8 @@ def append_to_ivf_index(
 
     obs = Observation()
     assigned = assigned.observe(obs, F.count(F.lit(1)).alias("n"))
-    write_layer(assigned, path, partition_by=["cluster"], mode="append")
+    index_layout.write(assigned, path, "cluster", mode="append")
     return int(obs.get["n"])
-
-
-def _compact_index_layout(
-    spark,
-    path: str,
-    partition_col: str,
-    carry_dirs: tuple[str, ...],
-    rewrite_dirs: tuple[str, ...],
-    target_rows_per_file: int | None = None,
-    split_col: str | None = None,
-) -> int:
-    """Shared core of index-layout compaction (IVF and BM25 share the
-    problem exactly): rewrite the data rows repartitioned by the
-    layout's partition column, carry ``carry_dirs`` verbatim, rewrite
-    each per-batch-accreting ``rewrite_dirs`` aux table to a single
-    file, and swap atomically. The generic
-    ``sources.lakehouse.compact_layer`` is NOT layout-safe — it swaps
-    the root (discarding the underscore aux dirs) and flattens the
-    partitioning directory pruning depends on.
-
-    File-count policy: default (``target_rows_per_file=None``) hashes
-    on the partition column — each value collapses to one task and
-    ONE file per directory, the right shape at bench scale. At real
-    scale one file per value is its own pathology (a hot bucket
-    becomes one multi-TB file written by one task and scanned with no
-    intra-directory parallelism), so passing ``target_rows_per_file``
-    switches to ``repartitionByRange(ceil(rows/target), partition,
-    split_col)``: value-contiguous ranges split oversized values
-    across consecutive tasks (range boundaries fall only between
-    distinct sort keys, so the secondary ``split_col`` — the row id —
-    is what makes a hot value divisible), the partitioned write still
-    routes every row to its ``<partition>=N/`` directory, and big
-    directories get ~size/target files while small ones keep one
-    (multi-file compaction is serve-equality tested).
-
-    CONCURRENCY CONTRACT: compaction must run with the ingest stream
-    QUIESCED (stop ``stream_index_sink``/``stream_bm25_sink`` first).
-    The pass reads a snapshot and swaps the whole root, so any batch
-    appended between the snapshot read and the swap would be silently
-    discarded; there is no lock because the single-writer maintenance
-    window is the operational model (the same contract Delta OPTIMIZE
-    assumes of concurrent blind appends it can't see). Crash safety is
-    ``sources.dirswap``'s: ``recover`` runs first and repairs any
-    remnant a previous interrupted pass left behind, and the new
-    layout is published with ``swap_in`` (remnant-recovery tested)."""
-    import os
-    import pathlib
-    import shutil
-
-    from lakehouse_to_rag_spark.sources.dirswap import (
-        recover,
-        staging_path,
-        swap_in,
-    )
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        write_layer,
-    )
-
-    recover(path)
-    df = read_layer(spark, path)
-    tmp = staging_path(path)
-    if target_rows_per_file is None:
-        out = df.repartition(partition_col)
-    else:
-        if target_rows_per_file < 1:
-            raise ValueError(
-                "_compact_index_layout: target_rows_per_file >= 1, "
-                f"got {target_rows_per_file}"
-            )
-        if split_col is None:
-            raise ValueError(
-                "_compact_index_layout: target_rows_per_file needs "
-                "split_col (the secondary range key that makes a hot "
-                "partition value divisible)"
-            )
-        n_out = max(1, -(-df.count() // target_rows_per_file))
-        out = df.repartitionByRange(
-            n_out, F.col(partition_col), F.col(split_col)
-        )
-    write_layer(out, tmp, partition_by=[partition_col])
-    for aux in carry_dirs:
-        src = os.path.join(path, aux)
-        if os.path.exists(src):
-            shutil.copytree(src, os.path.join(tmp, aux))
-    for aux in rewrite_dirs:
-        src = os.path.join(path, aux)
-        if os.path.exists(src):
-            write_layer(
-                read_layer(spark, src).coalesce(1), os.path.join(tmp, aux)
-            )
-    swap_in(tmp, path)
-    aux_all = set(carry_dirs) | set(rewrite_dirs)
-    return len(
-        [
-            f
-            for f in pathlib.Path(path).rglob("*.parquet")
-            if f.is_file() and not f.name.startswith(("_", "."))
-            and not aux_all.intersection(f.parts)
-        ]
-    )
 
 
 def compact_ivf_index(
@@ -578,25 +477,13 @@ def compact_ivf_index(
     once); the sink's ``_ledger`` rewrites to one file. Probe results
     are bit-equal before/after (compact-then-serve equality test).
     ``target_rows_per_file`` opts into multi-file directories for hot
-    clusters (see ``_compact_index_layout``'s file-count policy).
+    clusters (see ``index_layout.compact``'s file-count policy).
     Returns the data file count written."""
-    return _compact_index_layout(
+    return index_layout.compact(
         spark, path, "cluster",
         carry_dirs=("_centroids",), rewrite_dirs=("_ledger",),
         target_rows_per_file=target_rows_per_file, split_col="vec_id",
     )
-
-
-def _centroid_rows(spark, path: str) -> list[tuple[int, list[float]]]:
-    """A persisted index's quantizer, ``{path}/_centroids``, as
-    (centroid_id, cvec) rows read from parquet footers on the driver
-    (``retrieval._read_control_rows``, with its Spark fallback)."""
-    from lakehouse_to_rag_spark.operators.retrieval import _read_control_rows
-
-    return [
-        (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in _read_control_rows(spark, f"{path}/_centroids")
-    ]
 
 
 def _rank_probes(scored: list[tuple], nprobe: int) -> list[tuple]:
@@ -688,18 +575,17 @@ def ivf_topk_from_index(
     on the driver (``_driver_probes`` — the same 12dp cosine and
     tie rule as ``_query_probes``), so with a driver-local ``queries``
     frame nothing launches a job before the final plan. Only the
-    probed ``cluster=N`` dirs are read, by path
-    (``retrieval._read_partitions``; a layout that is not plain parquet
-    falls back to the discovery read with a literal ``isin`` filter) —
-    the executed scan's ``numPartitions`` metric equals the
-    probed-cluster count, not num_centroids (asserted in
-    tests/test_sources.py)."""
-    from lakehouse_to_rag_spark.operators.retrieval import _read_partitions
-
+    probed ``cluster=N`` dirs are read, by path, from the plain-parquet
+    index tree (``index_layout.read_partitions``) — the executed scan's
+    ``numPartitions`` metric equals the probed-cluster count, not
+    num_centroids (asserted in tests/test_sources.py)."""
     probes, clusters = _driver_probes(
-        spark, queries, _centroid_rows(spark, path), nprobe, id_col, vec_col
+        spark, queries, index_layout.centroid_rows(path), nprobe,
+        id_col, vec_col,
     )
-    assigned = _read_partitions(spark, path, "cluster", clusters)
+    assigned = index_layout.read_partitions(
+        spark, path, "cluster", clusters
+    )
     return _score_probed(
         assigned, probes, k, id_col, vec_col, dedupe_candidates=True
     )
@@ -1994,17 +1880,16 @@ def write_ivfpq_index(
     ``write_ivf_index`` but storing m code bytes per vector instead of
     the full vector (the layout a 100 TB ANN corpus actually ships);
     ``{path}/_coarse`` and ``{path}/_codebooks`` hold the model state
-    as flattened float rows. Returns the format written."""
-    from lakehouse_to_rag_spark.sources.lakehouse import write_layer
-
+    as flattened float rows. The layout is ``sources.index_layout``'s:
+    plain parquet. Returns the format written."""
     spark = corpus.sparkSession
     coarse, books = ivfpq_train(
         corpus, num_centroids, m, pq_k, sample_rows,
         id_col=id_col, vec_col=vec_col,
     )
     codes = ivfpq_encode(corpus, coarse, books, id_col, vec_col)
-    fmt = write_layer(codes, path, partition_by=["cluster"])
-    write_layer(
+    fmt = index_layout.write(codes, path, "cluster")
+    index_layout.write(
         local_df(
             spark,
             [(i, [float(x) for x in row]) for i, row in enumerate(coarse)],
@@ -2013,7 +1898,7 @@ def write_ivfpq_index(
         f"{path}/_coarse",
     )
     m_, k_, d_ = books.shape
-    write_layer(
+    index_layout.write(
         local_df(
             spark,
             [
@@ -2038,23 +1923,20 @@ def ivfpq_topk_from_index(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe a persisted IVF-PQ index: rebuild the (tiny) model state
-    from ``_coarse``/``_codebooks`` (``retrieval._read_control_rows``,
-    with its Spark fallback), then score exactly like the in-memory
-    path — the cluster equi-join prunes to the probed ``cluster=N/``
-    directories."""
+    from the footers of the plain-parquet ``_coarse``/``_codebooks``
+    tables (``index_layout.read_rows``), then score exactly like the
+    in-memory path — the cluster equi-join prunes to the probed
+    ``cluster=N/`` directories."""
     import numpy as np
-
-    from lakehouse_to_rag_spark.operators.retrieval import _read_control_rows
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
 
     coarse_rows = sorted(
         (int(r["centroid_id"]), [float(x) for x in r["cvec"]])
-        for r in _read_control_rows(spark, f"{path}/_coarse")
+        for r in index_layout.read_rows(f"{path}/_coarse")
     )
     coarse = np.array([r[1] for r in coarse_rows], dtype=np.float64)
     book_rows = sorted(
         (int(r["subspace"]), int(r["code"]), [float(x) for x in r["cvec"]])
-        for r in _read_control_rows(spark, f"{path}/_codebooks")
+        for r in index_layout.read_rows(f"{path}/_codebooks")
     )
     m = 1 + max(r[0] for r in book_rows)
     kc = 1 + max(r[1] for r in book_rows)
@@ -2062,7 +1944,8 @@ def ivfpq_topk_from_index(
     books = np.zeros((m, kc, d_sub), dtype=np.float64)
     for j, c, v in book_rows:
         books[j, c] = v
-    codes = read_layer(spark, path)
+    index_layout.partitions(path, "cluster")  # refuse a foreign tree
+    codes = index_layout.read(spark, path)
     return ivfpq_topk(
         codes, queries, coarse, books, k, nprobe, id_col, vec_col
     )

@@ -7225,15 +7225,17 @@ def events_weighted_mean_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum is the UDAF body; the oracle recomputes it as exact SQL —
     putting the GROUPED_AGG execution path (arrow group transfer,
     partial=false aggregation) under the value gate."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: `from __future__ import annotations`
-    # stringizes type hints, so the hint-based GROUPED_AGG inference
-    # can't see the Series -> scalar signature here
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
     def weighted_mean(v, w):
         ws = float(w.sum())
         return float((v * w).sum() / ws) if ws else float("nan")
+
+    # Series -> scalar hints make it grouped-aggregate; set as objects,
+    # since postponed annotations could not see the local ``pd``
+    weighted_mean.__annotations__ = {"v": pd.Series, "w": pd.Series, "return": float}
+    weighted_mean = pandas_udf("double")(weighted_mean)
 
     e = load_table(spark, sf_dir, "events")
     return (

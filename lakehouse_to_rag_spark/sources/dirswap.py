@@ -1,5 +1,6 @@
 """Crash-safe directory swap — the engine's stand-in for a Delta
-``mode="overwrite"`` commit when delta-spark is absent.
+``mode="overwrite"`` commit on a plain-parquet tree (every index tree
+is one, see ``sources.index_layout``).
 
 A rewrite of a directory ``dst`` (a layer root, an index root, or an
 aux table such as ``<index>/_stats``) is written in full to a

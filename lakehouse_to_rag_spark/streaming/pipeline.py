@@ -706,8 +706,6 @@ def stream_chunk_refresh_sink(
     hashes and indexes only. Returns the started StreamingQuery."""
     import os
 
-    from pyspark.errors import AnalysisException
-
     from lakehouse_to_rag_spark.operators.gold import cdc_chunks
     from lakehouse_to_rag_spark.sources.lakehouse import upsert_by_key
 
@@ -740,17 +738,18 @@ def stream_chunk_refresh_sink(
         # two consumers (diff both ways + manifest update): one
         # materialization of the map-only chunking
         chunks = chunks.localCheckpoint(eager=False)
-        # repair a half-finished manifest swap BEFORE reading: in the
-        # between-renames window the read would raise, this batch
-        # would treat the manifest as absent, and the fresh write
-        # would orphan (then lose) every other doc's rows
+        # repair a half-finished manifest swap BEFORE the existence
+        # check: in the between-renames window the path is missing,
+        # this batch would treat the manifest as absent, and the fresh
+        # write would orphan (then lose) every other doc's rows
         from lakehouse_to_rag_spark.sources.dirswap import recover
 
         recover(manifest_path)
-        try:
-            manifest = spark.read.parquet(manifest_path)
-        except AnalysisException:
-            manifest = None
+        manifest = (
+            spark.read.parquet(manifest_path)
+            if os.path.isdir(manifest_path)
+            else None
+        )
         keys = [id_col, "chunk_hash"]
         if manifest is not None:
             batch_ids = chunks.select(id_col).distinct()
@@ -778,7 +777,7 @@ def stream_chunk_refresh_sink(
             )
         work.write.mode("append").parquet(work_path)
         # manifest: full per-doc replacement, atomic swap
-        if manifest is None and not os.path.exists(manifest_path):
+        if manifest is None:
             chunks.write.parquet(manifest_path)
         else:
             upsert_by_key(spark, manifest_path, chunks, [id_col])
@@ -792,6 +791,40 @@ def stream_chunk_refresh_sink(
     return writer.start()
 
 
+def _ledger_guard(index_path: str, append_fn):
+    """The foreachBatch function of a ledgered index sink: skip empty
+    batches, skip batch_ids already in ``{index_path}/_ledger``
+    (foreachBatch re-delivers a failed batch under the SAME id), run
+    ``append_fn(batch, batch_id)``, then record the id. The ledger is
+    read from its parquet footers (``index_layout.read_rows``: no
+    Spark job); no ledger dir yet means no committed batch. The ledger
+    row lands AFTER the data append, so the one crash window re-appends
+    exactly one batch — absorbed at serve time (IVF candidate dedup)
+    or by upstream admission (BM25)."""
+    import os
+
+    from lakehouse_to_rag_spark.sources import index_layout
+    from lakehouse_to_rag_spark.sources.tables import local_df
+
+    ledger = f"{index_path}/_ledger"
+
+    def _guarded(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        rows = index_layout.read_rows(ledger) if os.path.isdir(ledger) else []
+        committed = {r["batch_id"] for r in rows}
+        if batch_id in committed:
+            return  # replay of an already-committed batch
+        append_fn(batch, batch_id)
+        index_layout.write(
+            local_df(batch.sparkSession, [(int(batch_id),)], "batch_id long"),
+            ledger,
+            mode="append",
+        )
+
+    return _guarded
+
+
 def _ledgered_index_sink(
     docs_stream: DataFrame,
     index_path: str,
@@ -799,44 +832,12 @@ def _ledgered_index_sink(
     append_fn,
     trigger_available_now: bool,
 ):
-    """Shared foreachBatch harness for ledgered index sinks: skip
-    empty batches, skip batch_ids already in ``{index_path}/_ledger``
-    (foreachBatch re-delivers a failed batch under the SAME id), run
-    ``append_fn(batch, batch_id)``, then record the id. The ledger row
-    lands AFTER the data append, so the one crash window re-appends
-    exactly one batch — absorbed at serve time (IVF candidate dedup)
-    or by upstream admission (BM25)."""
-    from pyspark.errors import AnalysisException
-
-    from lakehouse_to_rag_spark.sources.lakehouse import (
-        read_layer,
-        write_layer,
-    )
-
-    def _guarded(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        ledger = f"{index_path}/_ledger"
-        try:
-            committed = {
-                r["batch_id"] for r in read_layer(spark, ledger).collect()
-            }
-        except AnalysisException:
-            committed = set()  # first batch: no ledger yet
-        if batch_id in committed:
-            return  # replay of an already-committed batch
-        append_fn(batch, batch_id)
-        from lakehouse_to_rag_spark.sources.tables import local_df
-
-        write_layer(
-            local_df(spark, [(int(batch_id),)], "batch_id long"),
-            ledger,
-            mode="append",
-        )
-
+    """Shared foreachBatch harness for ledgered index sinks
+    (``_ledger_guard``). Returns the started StreamingQuery."""
     writer = (
-        docs_stream.writeStream.foreachBatch(_guarded)
+        docs_stream.writeStream.foreachBatch(
+            _ledger_guard(index_path, append_fn)
+        )
         .option("checkpointLocation", checkpoint_dir)
     )
     if trigger_available_now:

@@ -325,6 +325,20 @@ def test_simhash_numpy_equals_jvm(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
+def test_grouped_agg_udfs_declare_type_by_hints(spark, sf_dir):
+    """Both grouped-aggregate pandas UDFs are typed by hints: building
+    them raises no warning, deprecation included."""
+    import warnings
+
+    from lakehouse_to_rag_spark.operators.dedup import simhash_numpy
+    from lakehouse_to_rag_spark.plans.registry import events_weighted_mean_udaf
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        simhash_numpy(load_table(spark, sf_dir, "documents"), "doc_id", "text")
+        events_weighted_mean_udaf(spark, sf_dir)
+
+
 def test_tf_cosine_dense_multiblock_matches_single_block(spark, sf_dir):
     """The dense regime is a distributed upper-triangular block GEMM;
     at harness scale the corpus fits one block, so the cross-block

@@ -334,6 +334,25 @@ def test_directory_renames_only_in_swap_module():
     assert found == []
 
 
+def test_index_layout_has_one_owner():
+    """Only ``sources/index_layout.py`` imports ``pyarrow.parquet``, and
+    ``operators/similarity.py`` imports nothing from
+    ``operators/retrieval.py`` (that would close an import cycle)."""
+    imported = [
+        (rel, ".".join(filter(None, (getattr(node, "module", ""), a.name))))
+        for rel, node, _ in _package_nodes()
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for a in node.names
+    ]
+    assert {r for r, m in imported if m.startswith("pyarrow.parquet")} == {
+        "sources/index_layout.py"
+    }
+    assert not [
+        m for r, m in imported
+        if r == "operators/similarity.py" and ".operators.retrieval" in m
+    ]
+
+
 # The corpus generators whose rows feed the parallel media decoders:
 # they keep ``createDataFrame``'s defaultParallelism fan-out on purpose.
 _SYNTH_TABLES = {

@@ -666,47 +666,61 @@ class TestRagIndexBuild:
 
     @pytest.mark.parametrize("plant", ["stray_file", "delta_log"])
     def test_manifest_falls_back_to_spark_read(
-        self, spark, sf_dir, tmp_path, plant
+        self, spark, served_indexes, tmp_path, plant
     ):
-        """The manifest falls back to a Spark read, and equals it, when
-        the ivf layout is not plain parquet: a cluster dir holding a
-        file the footer path does not recognise (a parquet file
-        without the .parquet suffix — Spark still reads it, so the
-        manifest changes), or a ``_delta_log`` at the ivf root (a
-        delta rewrite leaves tombstoned files in the cluster dirs, so
-        the dir listing is not the live file set)."""
-        import os
-        import shutil
+        """The manifest has no Spark-read fallback: on a layout its
+        footer reader does not recognise (a part file without the
+        .parquet suffix in every cluster and bucket dir, or a
+        ``_delta_log`` at the root) it launches no job and raises the
+        layout error naming the path."""
+        from lakehouse_to_rag_spark.operators.retrieval import _index_manifest
 
-        from lakehouse_to_rag_spark.operators.retrieval import (
-            _index_manifest,
-            build_rag_indexes,
+        _, _, _, bm25, ivf = served_indexes
+        _plant_foreign_layout(tmp_path, bm25, ivf, plant)
+        err, launched, _ = jobs_between_markers(
+            spark,
+            lambda: _layout_error(lambda: _index_manifest(spark, str(tmp_path))),
         )
+        assert launched == set() and str(tmp_path) in str(err)
+
+    def test_index_trees_stay_parquet_on_delta_platform(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """With delta-spark on the classpath, index trees are still
+        plain parquet: the build, a BM25 and an IVF append, both
+        backends and both compactions write no ``_delta_log`` and give
+        the rows of a run without it."""
+        from lakehouse_to_rag_spark.operators import retrieval as R
+        from lakehouse_to_rag_spark.operators import similarity as S
+        from lakehouse_to_rag_spark.sources import lakehouse
+        from lakehouse_to_rag_spark.sources.tables import local_df
 
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        base = str(tmp_path / "ragidx")
-        fresh = sorted(
-            map(tuple, build_rag_indexes(d, base, num_centroids=8).collect())
+        q = _local_text(spark, [(0, "spark table join"), (1, "fast scan")])
+        new = d.filter("doc_id % 2 = 1").selectExpr(
+            "doc_id * 1000000 AS chunk_id", "text AS chunk"
         )
-        ivf = os.path.join(base, "ivf")
-        if plant == "delta_log":
-            os.mkdir(os.path.join(ivf, "_delta_log"))
-        else:
-            cdir = os.path.join(
-                ivf, min(n for n in os.listdir(ivf) if n.startswith("cluster="))
-            )
-            part = next(n for n in os.listdir(cdir) if n.endswith(".parquet"))
-            shutil.copy(
-                os.path.join(cdir, part), os.path.join(cdir, "part-copy")
-            )
 
-        rows, launched, _ = jobs_between_markers(
-            spark, lambda: _index_manifest(spark, base).collect()
-        )
-        assert launched  # the Spark fallback ran
-        rows = sorted(map(tuple, rows))
-        assert rows == _spark_manifest(spark, base)
-        assert (rows == fresh) == (plant == "delta_log")
+        def run(base, delta):
+            monkeypatch.setattr(lakehouse, "_delta_available", lambda s: delta)
+            bm25, ivf = f"{base}/bm25", f"{base}/ivf"
+            out = [R.build_rag_indexes(d.filter("doc_id % 2 = 0"), base).collect()]
+            out.append(R.append_to_bm25_index(spark, bm25, new, "chunk_id", "chunk"))
+            rows = spark.read.parquet(ivf).select("chunk_id", "embedding")
+            top = rows.orderBy("chunk_id").limit(20).collect()
+            vecs = local_df(spark, [(-i, v) for i, v in top], rows.schema)
+            out.append(S.append_to_ivf_index(spark, ivf, vecs, "chunk_id"))
+            for compacted in (False, True):
+                if compacted:
+                    out.append(R.compact_bm25_index(spark, bm25))
+                    out.append(S.compact_ivf_index(spark, ivf))
+                hits = S.ivf_topk_from_index(spark, ivf, vecs, id_col="chunk_id")
+                out.append(sorted(hits.collect()))
+                out.append(sorted(R.bm25_topk_from_index(spark, bm25, q).collect()))
+            return out
+
+        assert run(tmp_path / "delta", True) == run(tmp_path / "plain", False)
+        assert not list((tmp_path / "delta").rglob("_delta_log"))
 
     def test_pool_task_without_pinned_threads(self, spark, monkeypatch):
         """With pinned threads off, pyspark's thread-target helper hands
@@ -726,16 +740,14 @@ class TestRagIndexBuild:
 def _spark_manifest(spark, base):
     """The manifest as Spark jobs compute it from the written layout:
     per-cluster ivf counts, the bm25 posting total and _stats.n_docs."""
-    from lakehouse_to_rag_spark.sources.lakehouse import read_layer
-
     ivf = (
-        read_layer(spark, f"{base}/ivf")
+        spark.read.parquet(f"{base}/ivf")
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.lit("ivf"), F.col("cluster").cast("long"), "n")
     )
-    bm25 = read_layer(spark, f"{base}/bm25").agg(F.count(F.lit(1)))
-    stats = read_layer(spark, f"{base}/bm25/_stats").select("n_docs")
+    bm25 = spark.read.parquet(f"{base}/bm25").agg(F.count(F.lit(1)))
+    stats = spark.read.parquet(f"{base}/bm25/_stats").select("n_docs")
     return sorted(
         [tuple(r) for r in ivf.collect()]
         + [("bm25", -1, bm25.collect()[0][0])]
@@ -1124,6 +1136,38 @@ def served_indexes(spark, sf_dir, tmp_path_factory):
     return d, e, emb_store, str(base / "bm25"), str(base / "ivf")
 
 
+def _plant_foreign_layout(tmp_path, bm25, ivf, plant):
+    """Copies of the ``bm25`` and ``ivf`` roots under ``tmp_path`` with
+    what the written layout never holds: a ``_delta_log`` at the root,
+    a suffix-less part file in every partition dir, a root dir that is
+    not ``{col}=N``, or (``missing``) no tree at all. Returns the two
+    copied roots."""
+    import shutil
+
+    for src, col in ((bm25, "bucket"), (ivf, "cluster")):
+        root = tmp_path / src.rsplit("/", 1)[1]
+        shutil.copytree(src, root)
+        part = next(root.glob(f"{col}=*/*.parquet"))
+        plants = {
+            "delta_log": [root / "_delta_log"],
+            "stray_file": list(root.glob(f"{col}=*")),
+            "foreign_dir": [root / "x"],
+        }
+        if plant == "missing":
+            shutil.rmtree(root)
+        for pdir in plants.get(plant, []):
+            pdir.mkdir(exist_ok=True)
+            shutil.copy(part, pdir / "part-stray")
+    return str(tmp_path / "bm25"), str(tmp_path / "ivf")
+
+
+def _layout_error(call):
+    """The layout ``ValueError`` that ``call()`` raises."""
+    with pytest.raises(ValueError, match="rebuild the index") as err:
+        call()
+    return err.value
+
+
 def _local_text(spark, rows):
     """(query_id, query) rows as a driver-local frame."""
     from pyspark.sql import types as T
@@ -1270,70 +1314,76 @@ class TestServePath:
         )
         assert got == want and (1, "") in got
 
+    @pytest.mark.parametrize(
+        "plant", ["delta_log", "stray_file", "foreign_dir", "missing"]
+    )
+    def test_foreign_layout_is_refused(
+        self, spark, served_indexes, tmp_path, plant
+    ):
+        """What the written layout never holds — a ``_delta_log`` at the
+        root, a suffix-less part file in every partition dir, a root dir
+        that is not ``{col}=N``, no tree at all — is refused, naming the
+        path, by the manifest, both backends and (unless the plant is
+        below the root, which it does not list) the BM25 append. Before
+        the plant, a direct partition read has the schema of Spark's
+        discovery read."""
+        from lakehouse_to_rag_spark.operators import retrieval as R
+        from lakehouse_to_rag_spark.operators import similarity as S
+        from lakehouse_to_rag_spark.sources import index_layout
+
+        d, _, emb_store, bm25, ivf = served_indexes
+        for root, col in ((bm25, "bucket"), (ivf, "cluster")):
+            direct = index_layout.read_partitions(spark, root, col, range(64))
+            assert direct.schema == spark.read.parquet(root).schema
+        bm25, ivf = _plant_foreign_layout(tmp_path, bm25, ivf, plant)
+        calls = [
+            lambda: R._index_manifest(spark, str(tmp_path)),
+            lambda: bm25_topk_from_index(spark, bm25, _local_text(spark, [(0, "a")])),
+            lambda: S.ivf_topk_from_index(spark, ivf, emb_store.limit(2)),
+        ]
+        if plant != "stray_file":
+            calls.append(lambda: R.append_to_bm25_index(spark, bm25, d.limit(0)))
+        for call in calls:
+            assert str(tmp_path) in str(_layout_error(call))
+
     @pytest.mark.parametrize("plant", ["delta_log", "stray_file"])
     def test_partition_reads_fall_back_to_discovery(
-        self, spark, sf_dir, tmp_path, monkeypatch, plant
+        self, spark, served_indexes, tmp_path, monkeypatch, plant
     ):
-        """A layout the footer path does not recognise — an empty
-        ``_delta_log`` at the root, or a part file without the
-        .parquet suffix in every partition dir — takes the
-        read_layer fallback, and both backends return the same rows as
-        on the plain layout. The direct read's schema equals the
-        discovery read's."""
-        import pathlib
+        """The partition reads have no discovery fallback: on an empty
+        ``_delta_log`` at the root, or a part file without the .parquet
+        suffix in every partition dir, both backends raise the layout
+        error before any Spark job and without a Spark read of the
+        root."""
+        from pyspark.sql.readwriter import DataFrameReader
 
-        import pyarrow.parquet as pq
-
-        from lakehouse_to_rag_spark.operators.retrieval import (
-            _read_partitions,
-        )
         from lakehouse_to_rag_spark.operators.similarity import (
             ivf_topk_from_index,
-            write_ivf_index,
         )
-        from lakehouse_to_rag_spark.sources import lakehouse
-        from lakehouse_to_rag_spark.sources.tables import load_table
 
-        d = load_table(spark, sf_dir, "documents")
-        e = load_table(spark, sf_dir, "embeddings")
-        bm25, ivf = str(tmp_path / "bm25"), str(tmp_path / "ivf")
-        write_bm25_index(d, bm25, n_buckets=16)
-        write_ivf_index(e, ivf, num_centroids=8)
+        _, _, emb_store, bm25, ivf = served_indexes
+        bm25, ivf = _plant_foreign_layout(tmp_path, bm25, ivf, plant)
+        from lakehouse_to_rag_spark.sources.tables import local_df
+
         q = _local_text(spark, [(0, "the data pipeline")])
-        qv = e.filter("vec_id < 3")
+        qv = local_df(spark, emb_store.limit(2).collect(), emb_store.schema)
+        reads = []
+        real_parquet = DataFrameReader.parquet
 
-        def serve():
-            return (
-                sorted(map(tuple, bm25_topk_from_index(spark, bm25, q, k=5).collect())),
-                sorted(
-                    map(tuple, ivf_topk_from_index(spark, ivf, qv, k=5, nprobe=3).collect())
-                ),
+        def spy(self, *paths, **kw):
+            reads.append(paths)
+            return real_parquet(self, *paths, **kw)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+        for call in (
+            lambda: bm25_topk_from_index(spark, bm25, q, k=5),
+            lambda: ivf_topk_from_index(spark, ivf, qv, k=5, nprobe=3),
+        ):
+            err, launched, _ = jobs_between_markers(
+                spark, lambda: _layout_error(call)
             )
-
-        plain = serve()
-        assert plain[0] and plain[1]
-        for root, col in ((bm25, "bucket"), (ivf, "cluster")):
-            direct = _read_partitions(spark, root, col, list(range(16)))
-            assert direct.schema == lakehouse.read_layer(spark, root).schema
-
-        roots = []
-        real_read_layer = lakehouse.read_layer
-
-        def spy(spark_, path, *a, **kw):
-            roots.append(path)
-            return real_read_layer(spark_, path, *a, **kw)
-
-        monkeypatch.setattr(lakehouse, "read_layer", spy)
-        for root in (pathlib.Path(bm25), pathlib.Path(ivf)):
-            if plant == "delta_log":
-                (root / "_delta_log").mkdir()
-                continue
-            for pdir in (p for p in root.iterdir() if "=" in p.name):
-                part = next(pdir.glob("*.parquet"))
-                empty = pq.read_table(part).slice(0, 0)
-                pq.write_table(empty, str(pdir / "part-stray"))
-        assert serve() == plain
-        assert bm25 in roots and ivf in roots
+            assert launched == set() and str(tmp_path) in str(err)
+        assert reads == []
 
     def test_query_without_bucket_dirs_is_empty(self, spark, tmp_path):
         """A query whose buckets hold no postings reads no dir and

@@ -537,6 +537,21 @@ def test_stream_index_sink_replay_idempotent(spark, sf_dir, tmp_path):
     assert dup == before
 
 
+def test_ledger_replay_check_launches_no_job(spark, tmp_path):
+    """With a ledger present, the index sinks' replay check reads it
+    from its footers: a re-delivered batch is skipped without a job."""
+    from lakehouse_to_rag_spark.sources.tables import local_df
+    from lakehouse_to_rag_spark.streaming.pipeline import _ledger_guard
+    from tests.conftest import jobs_between_markers
+
+    appended = []
+    guard = _ledger_guard(str(tmp_path), lambda b, i: appended.append(i))
+    batch = local_df(spark, [(0, "x")], "doc_id long, text string")
+    guard(batch, 7)  # first delivery: appended, then recorded
+    _, launched, _ = jobs_between_markers(spark, lambda: guard(batch, 7))
+    assert appended == [7] and launched == set()
+
+
 def test_stream_bm25_sink_equals_batch_append_and_replays_idempotent(
     spark, sf_dir, tmp_path
 ):
